@@ -27,7 +27,17 @@ def local_df(spark, rows, schema):
     defeat the exactness contract)."""
     rows = list(rows)
     if not rows:
-        return spark.createDataFrame([], schema)
+        # an empty pandas frame takes the Python-RDD path too; one
+        # all-NULL local row cut by limit(0) plans as an empty
+        # LocalTableScan with the same schema
+        try:
+            from pyspark.sql.types import StructType
+
+            st = (schema if isinstance(schema, StructType)
+                  else StructType.fromDDL(schema))
+            return local_df(spark, [(None,) * len(st.fields)], st).limit(0)
+        except Exception:  # noqa: BLE001 — e.g. a non-nullable field
+            return spark.createDataFrame([], schema)
     try:
         import pandas as pd
 
@@ -41,3 +51,19 @@ def local_df(spark, rows, schema):
         return out
     except Exception:  # noqa: BLE001 — exactness first, speed second
         return spark.createDataFrame(rows, schema)
+
+
+def python_scans(df) -> int:
+    """Number of leaf scans in ``df``'s physical plan whose RDD lineage
+    reaches a ``PythonRDD`` — a ``createDataFrame(list)`` frame, read by
+    Python workers on every evaluation.  A localCheckpoint also plans
+    as ``Scan ExistingRDD`` but is JVM-only, so the node name alone
+    cannot tell them apart."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    n = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if (leaf.getClass().getSimpleName() == "RDDScanExec"
+                and "PythonRDD" in leaf.rdd().toDebugString()):
+            n += 1
+    return n

@@ -24,9 +24,14 @@ Plan shape (the 100 TB story):
   mention a query term, not the corpus's whole posting list;
 - corpus statistics (N, total token count) ride in as a broadcast
   single-row join;
-- the per-query rank window is fed by a map-side partial top-k cut
-  (<= k rows per query per partition), the same two-phase pattern as
-  operators/similarity._partial_cut.
+- the per-query rank window (``row_number() <= k``) gets Spark's own
+  partial ``WindowGroupLimit``: the optimizer (InferWindowGroupLimit)
+  inserts a per-partition cut to <= k rows per query under the window's
+  total order BELOW the window's exchange, so bounded rows reach the
+  shuffle — lossless, and it runs in the JVM (no Python job).  Spark
+  inserts it only for k below ``spark.sql.optimizer.
+  windowGroupLimitThreshold`` (1000 by default); above that results
+  stay correct, but every candidate reaches the exchange.
 """
 
 from __future__ import annotations
@@ -42,25 +47,6 @@ TOKEN_SPLIT = "[^a-z0-9]+"
 def _tokens(text_col):
     return F.filter(F.split(F.lower(text_col), TOKEN_SPLIT),
                     lambda t: t != F.lit(""))
-
-
-def _cut_topk(scored: DataFrame, k: int, score_col: str,
-              id_col: str) -> DataFrame:
-    """Map-side partial top-k per query under (score desc, id asc) — the
-    final rank order — so the rank window's exchange carries
-    <= k * n_partitions rows per query."""
-    schema = scored.schema
-
-    def cut(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values(["query_id", score_col, id_col],
-                                  ascending=[True, False, True],
-                                  kind="mergesort")
-            yield pdf.groupby("query_id", sort=False).head(k)
-
-    return scored.mapInPandas(cut, schema)
 
 
 def bm25_scores(docs: DataFrame, query_terms: DataFrame,
@@ -166,13 +152,13 @@ def score_tf(tf: DataFrame, query_terms: DataFrame,
 
 
 def rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Partial-cut + per-query rank over a (query_id, doc_id, n_terms,
-    score_micro) scored set — the shared tail of ``bm25_topk`` and the
-    indexed search path."""
-    partial = _cut_topk(scored, k, "score_micro", "doc_id")
+    """Per-query rank over a (query_id, doc_id, n_terms, score_micro)
+    scored set — the shared tail of ``bm25_topk`` and the indexed
+    search path; the window is cut map-side by Spark's partial
+    WindowGroupLimit (module docstring)."""
     w = Window.partitionBy("query_id").orderBy(F.desc("score_micro"),
                                                F.col("doc_id"))
-    return (partial.withColumn("rank", F.row_number().over(w).cast("int"))
+    return (scored.withColumn("rank", F.row_number().over(w).cast("int"))
             .filter(F.col("rank") <= k)
             .select("query_id", "doc_id", "n_terms", "score_micro", "rank"))
 
@@ -182,8 +168,8 @@ def bm25_topk(docs: DataFrame, query_terms: DataFrame, k: int = 10,
               tok: DataFrame | None = None,
               stats: DataFrame | None = None) -> DataFrame:
     """BM25 top-k documents per query — (query_id, doc_id, n_terms,
-    score_micro, rank): ``bm25_scores`` fed through a map-side partial
-    top-k cut into the per-query rank window."""
+    score_micro, rank): ``bm25_scores`` fed into the per-query rank
+    window (map-side cut by Spark's partial WindowGroupLimit)."""
     return rank_topk(bm25_scores(docs, query_terms, id_col, text_col,
                                  tok=tok, stats=stats), k)
 
@@ -204,7 +190,7 @@ def bm25_passages(chunks: DataFrame, query_terms: DataFrame, k: int = 10,
     arithmetic packing — a chunk_number >= 1e5 or a huge doc_id cannot
     silently corrupt the decode); the per-doc best-passage window runs
     over (query, doc)-bounded partitions, and the final per-query rank
-    window is fed through the same map-side partial top-k cut as
+    window gets the same map-side partial WindowGroupLimit as
     ``bm25_topk`` — at 100 TB a common-term query matches a constant
     fraction of the corpus, and without the cut that query's window
     partition receives every matched document in one reducer task."""
@@ -226,10 +212,9 @@ def bm25_passages(chunks: DataFrame, query_terms: DataFrame, k: int = 10,
             .withColumn("n_chunks_hit", F.count(F.lit(1)).over(wc))
             .filter(F.col("rk") == 1)
             .drop("rk"))
-    partial = _cut_topk(best, k, "score_micro", "doc")
     wr = Window.partitionBy("query_id").orderBy(F.desc("score_micro"),
                                                 F.col("doc"))
-    return (partial.withColumn("rank", F.row_number().over(wr).cast("int"))
+    return (best.withColumn("rank", F.row_number().over(wr).cast("int"))
             .filter(F.col("rank") <= k)
             .select("query_id", F.col("doc").alias("doc_id"),
                     F.col("chunk_number").alias("best_chunk"),
@@ -464,10 +449,12 @@ def hybrid_search_indexed(text_index, ivf_index, query_terms: DataFrame,
     hot term's cold segments drop out of the hybrid serving scan too
     (single-segment indexes degrade to ``search`` automatically)."""
     # the two legs are independent until fusion, and each does eager
-    # driver work up front (wand's dictionary/seed passes, the vector
-    # leg's probe planning) — prepare them CONCURRENTLY (guide §2.6)
-    # so one leg's jobs back-fill the other's scheduling gaps; the
-    # fused plan and its results are unchanged
+    # driver work up front (binding its query batch once, wand's
+    # dictionary/seed passes, the vector leg's probe planning) —
+    # prepare them CONCURRENTLY (guide §2.6) so one leg's jobs
+    # back-fill the other's scheduling gaps; both legs then read only
+    # JVM-local copies of the caller's frames, so the fused plan never
+    # re-runs the caller's plans
     from document_vector_pipeline_spark.functions.par import run_parallel
 
     def text_leg():

@@ -38,30 +38,6 @@ def _ranked(scored: DataFrame, k: int) -> DataFrame:
             .select("query_id", "vec_id", "score", "rank"))
 
 
-def _partial_cut(scored: DataFrame, k: int) -> DataFrame:
-    """Map-side partial top-k over (query_id, vec_id, score) rows: within
-    each Arrow batch keep only the best k rows per query under the FINAL
-    rank order (score desc, vec_id asc), so the global top-k is a top-k
-    of partial top-ks — lossless.  Narrow (no shuffle): the per-query
-    rank window after this cut receives <= k * n_batches rows per query
-    instead of the whole scored corpus, which is what keeps the
-    full-corpus compression ladders (pq_ann, binary_ann) from funnelling
-    n_corpus x n_queries rows into n_queries reducer tasks at 100x.
-    Mirrors VectorStore._partial_topk (store/vector_store.py)."""
-    schema = scored.schema
-
-    def cut(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values(["query_id", "score", "vec_id"],
-                                  ascending=[True, False, True],
-                                  kind="mergesort")
-            yield pdf.groupby("query_id", sort=False).head(k)
-
-    return scored.mapInPandas(cut, schema)
-
-
 def _live_vectors(df: DataFrame, col: str) -> DataFrame:
     """Drop rows whose vector column is NULL — the ingress rule for
     every vector operator: a null vector cannot be scored, encoded or
@@ -830,10 +806,16 @@ def pq_ann(corpus: DataFrame, queries: DataFrame, k: int = 10,
 
     Plan shape: corpus side is MAP-ONLY — the codebook and the per-query
     lookup tables are literals baked into one projection (encode = array_min
-    over struct(dist, code), score = element_at per subspace); a map-side
-    partial top-k (_partial_cut) then cuts each batch to <= k rows per
-    query BEFORE the rank window, so the only shuffle moves
-    k * n_batches * n_queries skinny rows, never the scored corpus.
+    over struct(dist, code), score = element_at per subspace).  Ranking
+    is ``row_number() <= k`` per query, and Spark's optimizer inserts a
+    partial WindowGroupLimit below the window's exchange that cuts each
+    partition to <= k rows per query under the window's own total order
+    (score desc, vec_id) — lossless, in the JVM — so the only shuffle
+    moves k * n_partitions * n_queries skinny rows, never the scored
+    corpus.  (The ``use_udf`` path also cuts each Arrow batch inside its
+    fused scorer.)  Spark inserts the partial limit only for k below
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000): above it
+    results stay correct, but every scored row reaches the exchange.
     Recall < 1 by design; scores are exact integers scaled once at the
     end."""
     sub = dim // n_sub
@@ -945,7 +927,7 @@ def pq_ann(corpus: DataFrame, queries: DataFrame, k: int = 10,
     scored = (df.select("vec_id", F.explode(F.array(*per_q)).alias("qs"))
               .select("vec_id", F.col("qs.query_id").alias("query_id"),
                       F.round(F.col("qs.i") / F.lit(1e12), 6).alias("score")))
-    return _ranked(_partial_cut(scored, k), k)
+    return _ranked(scored, k)
 
 
 def ivf_probes(q: DataFrame, cents: DataFrame,
@@ -1217,10 +1199,14 @@ def binary_ann(corpus: DataFrame, queries: DataFrame, k: int = 10,
     Plan: corpus encode is MAP-ONLY (two int64 words per row — the scan
     reads 16 bytes instead of dim floats once the words are persisted),
     queries broadcast, Hamming is whole-stage-codegen bit arithmetic,
-    then a map-side partial top-k (_partial_cut) trims each batch to
-    <= k rows per query so the final rank window's exchange carries
-    k * n_batches * n_queries rows, never the whole scored corpus.
-    All integers — bit-identical across engines."""
+    then the ``row_number() <= k`` rank window, below whose exchange
+    Spark's partial WindowGroupLimit trims each partition to <= k rows
+    per query (same total order, lossless, in the JVM), so the exchange
+    carries k * n_partitions * n_queries rows, never the whole scored
+    corpus — for k below ``spark.sql.optimizer.
+    windowGroupLimitThreshold`` (1000); above it every scored row
+    reaches the exchange, with the same result.  All integers —
+    bit-identical across engines."""
     cw = _sign_words(F.col(vec_col), dim)
     c = corpus.select(F.col(id_col).alias("vec_id"),
                       *[w.alias(f"w{i}") for i, w in enumerate(cw)])
@@ -1234,10 +1220,9 @@ def binary_ann(corpus: DataFrame, queries: DataFrame, k: int = 10,
     scored = (c.join(F.broadcast(q))
               .select("query_id", "vec_id",
                       (F.lit(dim) - ham).cast("int").alias("score")))
-    partial = _partial_cut(scored, k)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                F.col("vec_id"))
-    return (partial.withColumn("rank", F.row_number().over(w).cast("int"))
+    return (scored.withColumn("rank", F.row_number().over(w).cast("int"))
             .filter(F.col("rank") <= k)
             .select("query_id", "vec_id", "score", "rank"))
 

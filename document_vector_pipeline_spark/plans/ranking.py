@@ -194,8 +194,10 @@ def partial_topk(df: DataFrame, order_cols: list, k: int,
     """Map-side pre-cut for a global (or per-group) top-k window: keep
     the best ``k`` rows per (physical partition, *group_cols) first, so
     the final unpartitioned/per-group rank window sees at most
-    n_partitions·k rows per group instead of the whole frame — the JVM
-    twin of similarity._partial_cut.  LOSSLESS for any downstream
+    n_partitions·k rows per group instead of the whole frame — what
+    Spark's partial WindowGroupLimit does by itself for a partitioned
+    ``row_number() <= k`` window, made explicit for the unpartitioned
+    (global) windows that get no such pushdown.  LOSSLESS for any downstream
     ``rank <= k`` filter: a row outside its partition's local top-k
     cannot be in the global top-k.  The pre-cut window partitions on
     spark_partition_id(), so its groups are the input partitions —

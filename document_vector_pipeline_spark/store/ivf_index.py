@@ -711,9 +711,14 @@ class IVFIndex:
         Catalyst nodes and stall analysis on real serving batches.
         Exact integers end-to-end (int64 gathers + row sums, no
         floats until the final scale), so nprobe = n_centroids
-        reproduces ``pq_ann`` bit-for-bit."""
-        import math as _math
+        reproduces ``pq_ann`` bit-for-bit.
 
+        The query batch is collected ONCE (raw vectors and their
+        fixed-point form in one job) and the probe list rebuilt as a
+        JVM local relation, so the caller's plan runs once per call;
+        ``query_id`` keeps the caller's type.  Ranking is the
+        ``row_number() <= k`` window with Spark's partial
+        WindowGroupLimit below its exchange (see ``search_many``)."""
         from document_vector_pipeline_spark.operators.similarity import (
             opq_fixed_point,
             pq_fixed_point,
@@ -727,24 +732,24 @@ class IVFIndex:
         q6_expr = (opq_fixed_point(F.col(qvec_col), dim)
                    if self._pq_rotate()
                    else pq_fixed_point(F.col(qvec_col), dim))
-        q6_rows = (queries
-                   .select(F.col(qid_col).alias("query_id"),
-                           q6_expr.alias("q6"))
-                   .collect())
+        q_rows = (queries
+                  .select(F.col(qid_col).alias("query_id"),
+                          F.col(qvec_col).alias("raw"), q6_expr.alias("q6"))
+                  .collect())
         lut = {r["query_id"]: [[sum(r["q6"][m * sub + i] * cw[m * sub + i]
                                     for i in range(sub))
                                 for cw in cb]
                                for m in range(n_sub)]
-               for r in q6_rows}
-        raw = {r[0]: [float(v) for v in r[1]]
-               for r in queries.select(qid_col, qvec_col).collect()}
+               for r in q_rows}
+        raw = {r["query_id"]: [float(v) for v in r["raw"]] for r in q_rows}
         probe_pairs = []
         for qid, qd in raw.items():
             for cid in self._probe_ids(qd, nprobe):
                 probe_pairs.append((qid, cid))
+        qid_type = queries.schema[qid_col].dataType.simpleString()
         probes = local_df(
             self.spark,
-            probe_pairs, "query_id long, centroid_id long")
+            probe_pairs, f"query_id {qid_type}, centroid_id long")
         all_cells = sorted({c for _, c in probe_pairs})
         cells = (self._read_cells()
                  .filter(F.col("centroid_id").isin(all_cells))
@@ -778,22 +783,9 @@ class IVFIndex:
             "query_id", "vec_id",
             F.round(adc_dot(F.col("query_id"), F.col("pq_codes"))
                     / F.lit(1e12), 6).alias("score"))
-
-        schema = scored.schema
-
-        def cut(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                pdf = pdf.sort_values(["query_id", "score", "vec_id"],
-                                      ascending=[True, False, True],
-                                      kind="mergesort")
-                yield pdf.groupby("query_id", sort=False).head(k)
-
-        partial = scored.mapInPandas(cut, schema)
         w = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                    F.col("vec_id"))
-        return (partial.withColumn("rank",
+        return (scored.withColumn("rank",
                                    F.row_number().over(w).cast("int"))
                 .filter(F.col("rank") <= k)
                 .select("query_id", "vec_id", "score", "rank"))
@@ -866,12 +858,20 @@ class IVFIndex:
         from the tiny centroid table; the cells directory is then read
         ONCE, pruned to the union of all probed cells, and a broadcast
         join keeps each (row, query) pair only where the row's cell is in
-        that query's probe list.  Ranking is two-phase: a map-side
-        partial top-k per Arrow batch (same order as the final rank, so
-        lossless) feeds the per-query row_number window — ≤ k·n_batches
-        skinny rows per query reach the exchange, never the scored scan.
-        This replaces the one-search-per-query loop: N queries cost one
-        pruned scan instead of N."""
+        that query's probe list.  The query frame is collected ONCE:
+        the probe lists come from those driver rows and the batch is
+        rebuilt as a JVM local relation, so the caller's plan runs once
+        per call and ``query_id`` keeps the caller's type.  Ranking is
+        two-phase: for a ``row_number() <= k`` window Spark's optimizer
+        inserts a partial WindowGroupLimit below the window's exchange —
+        a per-partition cut to ≤ k rows per query under the window's own
+        total order (score desc, vec_id), so lossless, and in the JVM —
+        so ≤ k·n_partitions skinny rows per query reach the exchange,
+        never the scored scan.  Spark inserts it only for k below
+        ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000): above
+        that the result is the same, but every scored row reaches the
+        exchange.  This replaces the one-search-per-query loop: N
+        queries cost one pruned scan instead of N."""
         q_rows = (queries.filter(F.col(qvec_col).isNotNull())
                   .select(qid_col, qvec_col).collect())
         recs = []
@@ -880,10 +880,11 @@ class IVFIndex:
             recs.append((r[0], qd, math.sqrt(sum(v * v for v in qd)),
                          self._probe_ids(qd, nprobe)))
         all_cells = sorted({c for _, _, _, ps in recs for c in ps})
+        qid_type = queries.schema[qid_col].dataType.simpleString()
         qdf = local_df(
             self.spark,
-            recs, "query_id long, __qv array<double>, __qnorm double, "
-                  "__probes array<bigint>")
+            recs, f"query_id {qid_type}, __qv array<double>, "
+                  "__qnorm double, __probes array<bigint>")
         cells = (self._read_cells()
                  .filter(F.col("centroid_id").isin(all_cells)))
         vd = F.transform(F.col("v"), lambda v: v.cast("double"))
@@ -900,21 +901,8 @@ class IVFIndex:
                         F.array_contains("__probes", F.col("centroid_id")))
                   .withColumn("score", score)
                   .select("query_id", "vec_id", "score"))
-
-        schema = scored.schema
-
-        def cut(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                pdf = pdf.sort_values(["query_id", "score", "vec_id"],
-                                      ascending=[True, False, True],
-                                      kind="mergesort")
-                yield pdf.groupby("query_id", sort=False).head(k)
-
-        partial = scored.mapInPandas(cut, schema)
         w = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                    F.col("vec_id"))
-        return (partial.withColumn("rank", F.row_number().over(w))
+        return (scored.withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= k)
                 .select("query_id", "vec_id", "score", "rank"))

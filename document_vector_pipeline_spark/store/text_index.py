@@ -68,6 +68,7 @@ from __future__ import annotations
 
 import json
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -83,6 +84,17 @@ TOMBSTONE_SCHEMA = "doc_id long, seq int"
 DICT_SCHEMA = ("term string, df bigint, max_tf bigint, min_dl int, "
                "seg int")
 TVEC_SCHEMA = "doc_id long, term string, tf bigint, dl int, seg int, vbucket int"
+
+
+class _TermBatch(NamedTuple):
+    """A query batch bound once (TextIndex._bind_terms): ``frame`` the
+    set-normalized (query_id, term) rows and ``terms`` their distinct
+    terms, both JVM local relations; ``tb`` the sorted term buckets and
+    ``rows`` the (query_id, term) pairs as driver values."""
+    frame: DataFrame
+    terms: DataFrame
+    tb: list
+    rows: list
 
 
 class TextIndex:
@@ -459,18 +471,44 @@ class TextIndex:
         Normalization is over the CONTRACT columns (query_id, term)
         explicitly, so extra caller columns (weights, source tags)
         cannot survive the distinct and double-score a term
-        (round-13 ADVICE fix)."""
-        query_terms = query_terms.select("query_id", "term").distinct()
-        tb = [r[0] for r in query_terms
-              .select(self._tbucket(F.col("term"))).distinct().collect()]
-        post = self._postings().filter(F.col("tbucket").isin(tb))
+        (round-13 ADVICE fix).
+
+        The batch is collected ONCE (``_bind_terms``) and every later
+        job reads its JVM-local copy, so the caller's plan — a Python
+        RDD when built with ``createDataFrame(list)`` — runs once per
+        call."""
+        return self._search_bound(self._bind_terms(query_terms), k,
+                                  checkpoint, doc_filter)
+
+    def _bind_terms(self, query_terms: DataFrame) -> _TermBatch:
+        """Collect the caller's (query_id, term) batch ONCE — a query
+        batch is metadata-sized — together with each term's bucket, and
+        rebuild it as a JVM local relation: the set-normalized batch,
+        its distinct terms and the tbucket list all come from these
+        driver rows, so no later job re-runs the caller's plan.  The
+        distinct is driver-side over the contract columns."""
+        qt = query_terms.select("query_id", "term")
+        rows = list(dict.fromkeys(
+            tuple(r) for r in
+            qt.select("query_id", "term",
+                      self._tbucket(F.col("term"))).collect()))
+        terms = list(dict.fromkeys(t for _, t, _ in rows))
+        return _TermBatch(
+            local_df(self.spark, [(q, t) for q, t, _ in rows], qt.schema),
+            local_df(self.spark, [(t,) for t in terms], "term string"),
+            sorted({b for _, _, b in rows}),
+            [(q, t) for q, t, _ in rows])
+
+    def _search_bound(self, batch: _TermBatch, k: int,
+                      checkpoint: bool = True,
+                      doc_filter=None) -> DataFrame:
+        post = self._postings().filter(F.col("tbucket").isin(batch.tb))
         tf = (self._live(
-                post.join(F.broadcast(query_terms.select("term").distinct()),
-                          "term", "left_semi"))
+                post.join(F.broadcast(batch.terms), "term", "left_semi"))
               .select("doc_id", "term", "tf", "dl"))
         if checkpoint:
             tf = tf.localCheckpoint(eager=True)
-        scored = retrieval.score_tf(tf, query_terms, self.stats())
+        scored = retrieval.score_tf(tf, batch.frame, self.stats())
         if doc_filter is not None:
             scored = scored.filter(doc_filter)
         return retrieval.rank_topk(scored, k)
@@ -503,8 +541,7 @@ class TextIndex:
 
     # -- block-max (WAND/MaxScore) serving ----------------------------------
 
-    def _live_df_map(self, query_terms: DataFrame,
-                     tb: list | None = None) -> tuple[dict, dict]:
+    def _live_df_map(self, batch: _TermBatch) -> tuple[dict, dict]:
         """Exact live document frequency per query term WITHOUT the
         scoring read, plus the per-(term, seg) block-max rows.
 
@@ -518,8 +555,7 @@ class TextIndex:
         output is query-term-sized."""
         m = self._manifest_required()
         drows = (self._dict_df()
-                 .join(F.broadcast(query_terms.select("term").distinct()),
-                       "term", "left_semi")
+                 .join(F.broadcast(batch.terms), "term", "left_semi")
                  .collect())
         raw: dict[str, int] = {}
         blocks: dict[tuple, tuple] = {}
@@ -528,14 +564,9 @@ class TextIndex:
             blocks[(r["term"], int(r["seg"]))] = (r["max_tf"], r["min_dl"])
         dead: dict[str, int] = {}
         if m["tombstones"] and drows:
-            if tb is None:
-                tb = [r[0] for r in query_terms
-                      .select(self._tbucket(F.col("term"))).distinct()
-                      .collect()]
             post = (self._postings()
-                    .filter(F.col("tbucket").isin(tb))
-                    .join(F.broadcast(query_terms.select("term")
-                                      .distinct()), "term", "left_semi")
+                    .filter(F.col("tbucket").isin(batch.tb))
+                    .join(F.broadcast(batch.terms), "term", "left_semi")
                     .select("term", "doc_id", "seg"))
             ts = (self._tombstone_df()
                   .groupBy("doc_id").agg(F.max("seq").alias("__ts_seq")))
@@ -549,16 +580,16 @@ class TextIndex:
         live = {t: raw[t] - dead.get(t, 0) for t in raw}
         return live, blocks
 
-    def _wand_survivors(self, query_terms: DataFrame,
-                        k: int = 10, doc_filter=None):
+    def _wand_survivors(self, batch: _TermBatch, k: int = 10,
+                        doc_filter=None):
         """The segment-skip plan: per-(query, segment) score upper
         bounds from the dictionary sidecar, a seed pass over each
         query's best-bound segment to establish θ (the kth score), and
-        the survivor set {seg : ∃q bound(q, seg) ≥ θ_q}.  Returns
-        (survivors, df_frame, seeds, seed_scored, tb) — df_frame
-        carries the exact live per-term df so BOTH passes score with
-        identical idf, tb the once-collected tbucket list both passes
-        prune with.
+        the survivor set {seg : ∃q bound(q, seg) ≥ θ_q}.  ``batch`` is
+        the once-bound query batch (``_bind_terms``) whose tbucket list
+        both passes prune with.  Returns (survivors, df_frame, seeds,
+        seed_scored) — df_frame carries the exact live per-term df so
+        BOTH passes score with identical idf.
 
         Soundness: bound(q, s) = Σ_t ⌈contrib(idf⁺, max_tf, min_dl)⌉+1
         over q's terms present in s — contrib is increasing in tf and
@@ -574,17 +605,10 @@ class TextIndex:
         m = self._manifest_required()
         segs = list(m["segments"])
         n_docs, total_len = int(m["n_docs"]), int(m["total_len"])
-        # one tbucket collect serves the df correction AND both scoring
-        # passes (it was re-collected per pass); the dictionary read
-        # and the query-structure collect are independent driver
-        # actions — overlap them (§2.6)
-        tb = [r[0] for r in query_terms
-              .select(self._tbucket(F.col("term"))).distinct().collect()]
-        (live_df, blocks), qrows = run_parallel(
-            lambda: self._live_df_map(query_terms, tb=tb),
-            lambda: [(r["query_id"], r["term"]) for r in
-                     query_terms.select("query_id", "term").distinct()
-                     .collect()])
+        # one bind serves the df correction, the bounds AND both scoring
+        # passes: the tbucket list and the (query_id, term) structure
+        # are driver rows, the term frames JVM-local
+        live_df, blocks = self._live_df_map(batch)
         df_frame = local_df(
             self.spark,
             [(t, n) for t, n in live_df.items()] or
@@ -596,7 +620,7 @@ class TextIndex:
             return math.floor(x) + 1.0
 
         bounds: dict = {}
-        for qid, term in qrows:
+        for qid, term in batch.rows:
             if term not in live_df:
                 continue
             iplus = idf_plus(live_df[term])
@@ -620,14 +644,13 @@ class TextIndex:
             best = max(per_seg.items(), key=lambda kv: (kv[1], -kv[0]))
             seeds.add(best[0])
         if not seeds:
-            return [], df_frame, set(), None, tb
+            return [], df_frame, set(), None
         # the seed pass is EXACT scoring of the seed segments — keep it
         # (checkpointed: the θ collect materializes it anyway) so the
         # final pass only scores the NON-seed survivors instead of
         # re-reading the hottest segments twice (round 12: the no-prune
         # worst case — uniform synthetic corpora — was paying 2×)
-        seed_scored = self._score_segs(sorted(seeds), query_terms,
-                                       df_frame, tb=tb)
+        seed_scored = self._score_segs(sorted(seeds), batch, df_frame)
         if doc_filter is not None:
             seed_scored = seed_scored.filter(doc_filter)
         seed_scored = seed_scored.localCheckpoint(eager=True)
@@ -641,31 +664,25 @@ class TextIndex:
             for s, b in per_seg.items():
                 if th is None or b >= th:
                     survivors.add(s)
-        return sorted(survivors), df_frame, seeds, seed_scored, tb
+        return sorted(survivors), df_frame, seeds, seed_scored
 
-    def _score_segs(self, segs: list[int], query_terms: DataFrame,
-                    df_frame: DataFrame, checkpoint: bool = True,
-                    tb: list | None = None) -> DataFrame:
+    def _score_segs(self, segs: list[int], batch: _TermBatch,
+                    df_frame: DataFrame,
+                    checkpoint: bool = True) -> DataFrame:
         """search's pruned-read scoring restricted to a segment subset,
         with the live df supplied explicitly (a subset read no longer
         sees every posting row, so df must not be recomputed from it).
         A doc's rows live in exactly one segment, so every doc the
-        subset DOES contain is scored completely.  ``tb`` lets the
-        caller reuse an already-collected tbucket list — wand_search
-        scores two segment subsets of the SAME query terms, and the
-        bucket list is one driver job per collect."""
-        if tb is None:
-            tb = [r[0] for r in query_terms
-                  .select(self._tbucket(F.col("term"))).distinct()
-                  .collect()]
-        post = self._postings(segs).filter(F.col("tbucket").isin(tb))
+        subset DOES contain is scored completely.  ``batch`` is the
+        once-bound query batch — wand_search scores two segment subsets
+        of the SAME query terms."""
+        post = self._postings(segs).filter(F.col("tbucket").isin(batch.tb))
         tf = (self._live(
-                post.join(F.broadcast(query_terms.select("term")
-                                      .distinct()), "term", "left_semi"))
+                post.join(F.broadcast(batch.terms), "term", "left_semi"))
               .select("doc_id", "term", "tf", "dl"))
         if checkpoint:
             tf = tf.localCheckpoint(eager=True)
-        return retrieval.score_tf(tf, query_terms, self.stats(),
+        return retrieval.score_tf(tf, batch.frame, self.stats(),
                                   df=F.broadcast(df_frame))
 
     def wand_search(self, query_terms: DataFrame, k: int = 10,
@@ -693,25 +710,27 @@ class TextIndex:
         scoring all see one row per (query_id, term), so duplicate-term
         input cannot under-bound a segment (round-12 ADVICE fix); the
         distinct is over the contract columns (query_id, term) so
-        caller-side extra columns cannot defeat it (round-13)."""
-        query_terms = query_terms.select("query_id", "term").distinct()
+        caller-side extra columns cannot defeat it (round-13).  The
+        batch is collected once (``_bind_terms``), as in ``search``."""
+        batch = self._bind_terms(query_terms)
         m = self._manifest_required()
         if len(m["segments"]) <= 1:
-            return self.search(query_terms, k, doc_filter=doc_filter)
-        survivors, df_frame, seeds, seed_scored, tb = \
-            self._wand_survivors(query_terms, k, doc_filter)
+            return self._search_bound(batch, k, doc_filter=doc_filter)
+        survivors, df_frame, seeds, seed_scored = \
+            self._wand_survivors(batch, k, doc_filter)
         if not survivors:
-            qt = query_terms.schema["query_id"].dataType.simpleString()
-            return self.spark.createDataFrame(
-                [], f"query_id {qt}, doc_id long, n_terms bigint, "
-                    f"score_micro bigint, rank int")
+            qt = batch.frame.schema["query_id"].dataType.simpleString()
+            return local_df(
+                self.spark, [], f"query_id {qt}, doc_id long, "
+                                f"n_terms bigint, score_micro bigint, "
+                                f"rank int")
         # seed segments are already exactly scored (and doc-filtered,
         # and checkpointed) by the seed pass; a live doc's rows live in
         # exactly ONE segment, so the union is disjoint by construction
         rest = [seg for seg in survivors if seg not in seeds]
         scored = seed_scored
         if rest:
-            extra = self._score_segs(rest, query_terms, df_frame, tb=tb)
+            extra = self._score_segs(rest, batch, df_frame)
             if doc_filter is not None:
                 extra = extra.filter(doc_filter)
             scored = scored.unionByName(extra)
@@ -1374,9 +1393,9 @@ class TextIndex:
         Plan: pruned posting read (only the phrase terms' tbuckets),
         positions exploded and re-based (pos − offset), a phrase
         occurrence is a (doc, base) where ALL offsets align — one
-        candidate-sized aggregation; rank window fed through the
-        map-side partial cut.  The classic positional-index query
-        (Lucene match_phrase) as one declarative plan."""
+        candidate-sized aggregation; the rank window's partial
+        WindowGroupLimit cuts map-side.  The classic positional-index
+        query (Lucene match_phrase) as one declarative plan."""
         tb = [r[0] for r in phrases
               .select(self._tbucket(F.col("term"))).distinct().collect()]
         need = (phrases.groupBy("query_id")
@@ -1399,11 +1418,10 @@ class TextIndex:
                .filter(F.col("n_off") == F.col("n_terms"))
                .groupBy("query_id", "doc_id")
                .agg(F.count(F.lit(1)).alias("n_occ")))
-        partial = retrieval._cut_topk(occ, k, "n_occ", "doc_id")
         from pyspark.sql import Window
         w = Window.partitionBy("query_id").orderBy(F.desc("n_occ"),
                                                    F.col("doc_id"))
-        return (partial
+        return (occ
                 .withColumn("rank", F.row_number().over(w).cast("int"))
                 .filter(F.col("rank") <= k)
                 .select("query_id", "doc_id", "n_occ", "rank"))
@@ -1420,7 +1438,8 @@ class TextIndex:
         Plan: pruned posting read; each position fans out to at most
         ``w`` candidate bases (sequence + explode — bounded blowup),
         distinct (term, base) pairs aggregate to qualifying bases —
-        candidate-sized throughout; partial-cut rank window."""
+        candidate-sized throughout; rank window with a partial
+        WindowGroupLimit."""
         if w < 1:
             # F.sequence(p-w+1, p) would DESCEND for w < 1 and emit
             # phantom bases — refuse instead of silently mis-counting
@@ -1451,11 +1470,10 @@ class TextIndex:
                .filter(F.col("n_t") == F.col("n_terms"))
                .groupBy("query_id", "doc_id")
                .agg(F.count(F.lit(1)).alias("n_windows")))
-        partial = retrieval._cut_topk(occ, k, "n_windows", "doc_id")
         from pyspark.sql import Window
         wd = Window.partitionBy("query_id").orderBy(F.desc("n_windows"),
                                                     F.col("doc_id"))
-        return (partial
+        return (occ
                 .withColumn("rank", F.row_number().over(wd).cast("int"))
                 .filter(F.col("rank") <= k)
                 .select("query_id", "doc_id", "n_windows", "rank"))
@@ -1477,9 +1495,10 @@ class TextIndex:
         list) and queries fold by LENGTH GROUP — each extra offset is
         one candidate-sized join constrained by the previous position
         and the span bound, so intermediate tuples stay
-        window-bounded; partial-cut rank window.  Tuple counts are
-        exact (a term repeated inside one window multiplies tuples —
-        the same combinatorics Lucene spans expose)."""
+        window-bounded; rank window with a partial WindowGroupLimit.
+        Tuple counts are exact (a term repeated inside one window
+        multiplies tuples — the same combinatorics Lucene spans
+        expose)."""
         if w < 1:
             raise ValueError("span window w must be >= 1")
         struct = sorted({(r["query_id"], int(r["offset"]), r["term"])
@@ -1528,11 +1547,10 @@ class TextIndex:
             g = (cur.groupBy("query_id", "doc_id")
                  .agg(F.count(F.lit(1)).alias("n_spans")))
             out = g if out is None else out.unionByName(g)
-        partial = retrieval._cut_topk(out, k, "n_spans", "doc_id")
         from pyspark.sql import Window
         wd = Window.partitionBy("query_id").orderBy(F.desc("n_spans"),
                                                     F.col("doc_id"))
-        return (partial
+        return (out
                 .withColumn("rank", F.row_number().over(wd).cast("int"))
                 .filter(F.col("rank") <= k)
                 .select("query_id", "doc_id", "n_spans", "rank"))

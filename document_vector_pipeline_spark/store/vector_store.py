@@ -350,26 +350,31 @@ class VectorStore:
         parallelism is the cluster's, not the caller's loop.
 
         Scale shape: scoring is map-side (broadcast queries over the store
-        scan, JVM fold per row).  Ranking is TWO-phase: a map-side partial
-        top-k cuts each scan partition to ≤ k rows per query BEFORE any
-        exchange, so the global row_number window sees ≤ k·n_partitions
-        skinny rows per query instead of the full n_store × n_queries
-        cross product — with 25 queries over a 100 TB store, the old
-        single-window plan shuffled everything into 25 giant tasks; this
-        one shuffles k·n_partitions·25 four-column rows.  The partial cut
-        uses the same total order as the final rank (score desc,
-        document_url, id — all ASCII, so pandas and Spark collate
-        identically), which makes it lossless for top-k.
+        scan, JVM fold per row).  Ranking is TWO-phase: Spark's partial
+        WindowGroupLimit (inserted by the optimizer for a
+        ``row_number() <= k`` filter) cuts each scan partition to ≤ k
+        rows per query BEFORE the window's exchange, so the global
+        row_number window sees ≤ k·n_partitions skinny rows per query
+        instead of the full n_store × n_queries cross product — with 25
+        queries over a 100 TB store, a single-window plan shuffles
+        everything into 25 giant tasks; this one shuffles
+        k·n_partitions·25 four-column rows.  The partial cut uses the
+        window's own total order (score desc, document_url, id), which
+        makes it lossless for top-k, and runs in the JVM.  Spark inserts
+        it only for k below ``spark.sql.optimizer.
+        windowGroupLimitThreshold`` (1000): above that the result is the
+        same, but every scored row reaches the exchange.
 
         ``quantized=True`` scores against the int8 QuantizedFlat column
         with an exact integer dot (the batch twin of
         ``search(quantized=True)``): same two-phase plan, 4× less scan.
 
-        ``use_udf=True`` (default) fuses scoring and the partial top-k
+        ``use_udf=True`` (default) fuses scoring and a per-batch top-k
         into one Arrow pass (bit-identical to the expression fold — see
         search()); the query set is collected to the driver first, which
         is the same small-by-definition broadcast assumption the
-        expression path makes.  ``use_udf=False`` keeps the expression
+        expression path makes.  The rank window above it gets the same
+        partial WindowGroupLimit.  ``use_udf=False`` keeps the expression
         scorer as the oracle-facing twin."""
         from pyspark.sql import Window
 
@@ -427,10 +432,9 @@ class VectorStore:
         scored = (df.crossJoin(F.broadcast(q))
                   .withColumn("score", score)
                   .select("__qid", "id", "document_url", "score"))
-        partial = self._partial_topk(scored, k)
         w = Window.partitionBy("__qid").orderBy(
             F.desc("score"), "document_url", "id")
-        return (partial
+        return (scored
                 .withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= k)
                 .select(F.col("__qid").alias("query_id"),
@@ -540,28 +544,6 @@ class VectorStore:
 
         return df.select(*cols).mapInPandas(score_cut, schema)
 
-    @staticmethod
-    def _partial_topk(scored: DataFrame, k: int) -> DataFrame:
-        """Map-side partial top-k: within each Arrow batch keep only the
-        best k rows per query under (score desc, document_url, id) — the
-        exact order the final window ranks by, so the global top-k is a
-        subset of the union of partial top-ks (top-k of top-ks).  Narrow
-        (no shuffle); the scored input is already skinny (4 columns, no
-        embeddings), so the Arrow transfer is cheap relative to the
-        exchange it replaces."""
-        schema = scored.schema
-
-        def cut(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                pdf = pdf.sort_values(
-                    ["__qid", "score", "document_url", "id"],
-                    ascending=[True, False, True, True], kind="mergesort")
-                yield pdf.groupby("__qid", sort=False).head(k)
-
-        return scored.mapInPandas(cut, schema)
-
     def reembed(self, embed_col_fn) -> None:
         """Embedding-model migration: recompute every row's embedding from
         its stored chunk_text with ``embed_col_fn(chunk_text_col) ->
@@ -590,7 +572,7 @@ class VectorStore:
 
         Plan: the keyword leg tokenizes one column-pruned store scan
         (term-filtered before its tf shuffle, see bm25_scores); the
-        vector leg is the existing fused Arrow scorer + partial top-k;
+        vector leg is the existing fused Arrow scorer + per-batch top-k;
         fusion joins two top-k lists — a few k rows per query.  Chunk
         identity travels as document_url + chr(1) + id so the scoring
         core is reused unchanged on a composite string key."""
@@ -608,14 +590,13 @@ class VectorStore:
                          "score_micro")
                 .groupBy("query_id", "doc")
                 .agg(F.max("score_micro").alias("score_micro")))
-        # map-side partial top-k BEFORE the per-query rank window: a
+        # the rank window's partial WindowGroupLimit cuts map-side: a
         # common-term query matches a constant fraction of the corpus,
         # and the window partition for it must receive <= k rows per
-        # batch, not every matched document (round-5 `weak` grade)
-        partial = retrieval._cut_topk(best, k, "score_micro", "doc")
+        # partition, not every matched document (round-5 `weak` grade)
         wr = Window.partitionBy("query_id").orderBy(
             F.desc("score_micro"), F.col("doc"))
-        text = (partial.withColumn("rank",
+        text = (best.withColumn("rank",
                                    F.row_number().over(wr).cast("int"))
                 .filter(F.col("rank") <= k)
                 .select("query_id", F.col("doc").alias("doc_id"), "rank"))

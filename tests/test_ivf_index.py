@@ -11,6 +11,7 @@ from document_vector_pipeline_spark.operators.similarity import (
     brute_force_topk,
 )
 from document_vector_pipeline_spark.store.ivf_index import IVFIndex
+from tests.plan_shape import rank_window_cuts
 
 N_CENTROIDS = 8
 
@@ -84,7 +85,8 @@ def test_search_many_matches_looped_search(index, embeddings_small):
     plan = batch._jdf.queryExecution().executedPlan().toString()
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "centroid_id" in m.group(1), "cells scan not pruned"
-    assert "MapInPandas" in plan  # partial top-k below the rank window
+    # partial top-k (WindowGroupLimit) below the rank window's exchange
+    assert rank_window_cuts(plan) == [True]
 
 
 def test_ivf_build_twins_equal(spark, tmp_path):
@@ -561,3 +563,41 @@ def test_rotated_pq_index_exhaustive_probe_equals_opq_ann(
     want2 = sorted(map(tuple, opq_ann(merged, qdf, k=10, n_codes=8,
                                       n_sub=8, cb=frozen_cb).collect()))
     assert got2 == want2
+
+
+@pytest.fixture(scope="module")
+def pq_index(spark, embeddings_small, tmp_path_factory):
+    idx = IVFIndex(spark, str(tmp_path_factory.mktemp("ivf_ids") / "idx"),
+                   n_centroids=4)
+    idx.build(embeddings_small)
+    idx.build_pq(embeddings_small)
+    return idx
+
+
+@pytest.mark.parametrize("qtype", ["int", "string"])
+def test_search_many_keeps_caller_query_id_type(spark, pq_index,
+                                                embeddings_small, qtype):
+    """search_many and search_many_adc rebuild the caller's query batch
+    with the caller's query_id type: an int id comes back as int (not
+    bigint), a string id is accepted — and the hits equal the long-id
+    search's, query by query."""
+    rows = (embeddings_small.filter(F.col("vec_id") < 3)
+            .select("vec_id", "embedding").collect())
+
+    def qid(i):
+        return f"q{i}" if qtype == "string" else int(i)
+
+    base = spark.createDataFrame(
+        [(int(r.vec_id), list(r.embedding)) for r in rows],
+        "query_id long, query_vec array<float>")
+    typed = spark.createDataFrame(
+        [(qid(r.vec_id), list(r.embedding)) for r in rows],
+        f"query_id {qtype}, query_vec array<float>")
+    for search in (pq_index.search_many, pq_index.search_many_adc):
+        got = search(typed, k=5, nprobe=2)
+        assert got.schema["query_id"].dataType.simpleString() == qtype
+        want = {(qid(r.query_id), r.rank, r.vec_id, r.score)
+                for r in search(base, k=5, nprobe=2).collect()}
+        assert {(r.query_id, r.rank, r.vec_id, r.score)
+                for r in got.collect()} == want
+        assert len(want) == 15

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from document_vector_pipeline_spark.operators import retrieval
+from tests.plan_shape import rank_window_cuts
 
 
 @pytest.fixture(scope="module")
@@ -58,11 +59,13 @@ def test_bm25_multi_term_and_missing_term(spark, tiny_docs):
 
 
 def test_bm25_partial_cut_feeds_window(spark, tiny_docs):
+    """The rank window's input is cut map-side by Spark's partial
+    WindowGroupLimit below the window's exchange — no Python pass."""
     qt = spark.createDataFrame([(0, "apple")], "query_id long, term string")
     df = retrieval.bm25_topk(tiny_docs, qt, k=3)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    assert plan.index("Window") < plan.index("MapInPandas")
+    assert rank_window_cuts(plan) == [True]
+    assert "MapInPandas" not in plan
 
 
 def test_rrf_hand_case(spark):
@@ -172,15 +175,16 @@ def test_minmax_fuse_hand_case(spark):
 
 def test_bm25_passages_rank_window_is_partial_cut(spark):
     """Round 6: the final per-query rank window consumes a map-side
-    partial top-k cut (round-5 `weak` grade), same as bm25_topk."""
+    partial top-k cut (round-5 `weak` grade), same as bm25_topk — Spark's
+    partial WindowGroupLimit below the window's exchange."""
     chunks = spark.createDataFrame(
         [(1, 0, "apple banana"), (2, 0, "apple cherry")],
         "doc_id long, chunk_number int, chunk_text string")
     qt = spark.createDataFrame([(0, "apple")], "query_id long, term string")
     df = retrieval.bm25_passages(chunks, qt, k=5)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    assert plan.index("Window") < plan.index("MapInPandas")
+    # the outermost row_number window is the final rank
+    assert rank_window_cuts(plan)[0]
 
 
 def test_bm25_passages_survives_large_chunk_numbers(spark):

@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 
 from document_vector_pipeline_spark.config import PipelineConfig
 from document_vector_pipeline_spark.store.vector_store import VectorStore
+from tests.plan_shape import rank_window_cuts
 
 CFG = PipelineConfig(embedding_dimensions=4, store_buckets=8)
 
@@ -371,9 +372,10 @@ def test_hybrid_search_rank_window_is_partial_cut(spark, store):
                                "query_id long, query_vec array<float>")
     df = store.hybrid_search(qt, qv, k=5)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # both legs' rank windows sit above a MapInPandas partial cut
-    assert plan.count("MapInPandas") >= 2
-    assert plan.index("Window") < plan.index("MapInPandas")
+    # both legs' rank windows (and the fusion rank) sit above a partial
+    # WindowGroupLimit below their exchange
+    cuts = rank_window_cuts(plan)
+    assert len(cuts) >= 3 and all(cuts), cuts
     # and the fusion still returns both documents
     assert df.count() == 2
 

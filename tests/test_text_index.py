@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from document_vector_pipeline_spark.operators import retrieval
 from document_vector_pipeline_spark.store.text_index import TextIndex
+from tests.plan_shape import rank_window_cuts
 
 
 @pytest.fixture(scope="module")
@@ -102,8 +103,9 @@ def test_search_prunes_to_query_term_buckets(spark, docs, qt, tmp_path):
     plan = df._jdf.queryExecution().executedPlan().toString()
     # the posting scan carries a partition filter on tbucket
     assert "PartitionFilters" in plan and "tbucket" in plan
-    # and the rank window sits above the partial-cut MapInPandas
-    assert plan.index("Window") < plan.index("MapInPandas")
+    # and the rank window sits above a partial WindowGroupLimit cut
+    # below its exchange
+    assert rank_window_cuts(plan) == [True]
 
 
 def test_upsert_never_touches_existing_segments(spark, tmp_path):
@@ -195,7 +197,7 @@ def test_hybrid_indexed_keyword_leg_skips_segments(spark, tmp_path):
         "doc_id long, text string"))
     segs = ti._seg_list()
     assert len(segs) == 3
-    survivors, _, _, _, _ = ti._wand_survivors(qt, k=3)
+    survivors, _, _, _ = ti._wand_survivors(ti._bind_terms(qt), k=3)
     assert len(survivors) < len(segs)          # cold segments skipped
 
     vi = IVFIndex(spark, str(tmp_path / "sk_vi"), n_centroids=4)
@@ -302,7 +304,7 @@ def test_phrase_search_plan_prunes_and_partial_cuts(spark, docs, tmp_path):
     plan = (idx.phrase_search(ph, k=5)
             ._jdf.queryExecution().executedPlan().toString())
     assert "PartitionFilters" in plan and "tbucket" in plan
-    assert plan.index("Window") < plan.index("MapInPandas")
+    assert rank_window_cuts(plan) == [True]
 
 
 def test_near_search_window_semantics(spark, tmp_path):
@@ -672,7 +674,7 @@ def test_span_search_plan_prunes_and_partial_cuts(spark, docs, tmp_path):
     plan = (idx.span_search(ph, w=5, k=5, checkpoint=False)
             ._jdf.queryExecution().executedPlan().toString())
     assert "PartitionFilters" in plan and "tbucket" in plan
-    assert plan.index("Window") < plan.index("MapInPandas")
+    assert rank_window_cuts(plan) == [True]
 
 
 def test_boolean_search_semantics_and_scan_consistency(
@@ -1060,7 +1062,7 @@ def test_wand_search_skips_provably_cold_segments(spark, tmp_path):
         idx.upsert(cold)
     qt1 = spark.createDataFrame([(0, "needle")],
                                 "query_id long, term string")
-    survivors, _, _, _, _ = idx._wand_survivors(qt1, k=3)
+    survivors, _, _, _ = idx._wand_survivors(idx._bind_terms(qt1), k=3)
     assert survivors == [0], survivors       # both cold segments skipped
     assert _sorted(idx.wand_search(qt1, k=3)) == _sorted(idx.search(qt1, k=3))
     # k large enough to need the cold docs -> they must come back
@@ -1080,7 +1082,7 @@ def test_wand_live_df_map_is_exact(spark, docs, tmp_path):
     qterms = spark.createDataFrame(
         [(0, "apple"), (0, "banana"), (1, "fig")],
         "query_id long, term string")
-    live, blocks = idx._live_df_map(qterms)
+    live, blocks = idx._live_df_map(idx._bind_terms(qterms))
     truth = {r["term"]: r["n"] for r in
              (idx._live(idx._postings())
               .join(F.broadcast(qterms.select("term").distinct()),
