@@ -67,3 +67,15 @@ def python_scans(df) -> int:
                 and "PythonRDD" in leaf.rdd().toDebugString()):
             n += 1
     return n
+
+
+def release_checkpoint(df) -> None:
+    """Free the blocks a ``localCheckpoint`` frame holds; the frame must
+    not be evaluated afterwards.  ``DataFrame.unpersist()`` does not free
+    them: it drops cache-manager entries, and a local checkpoint is an
+    RDD persisted outside the cache manager.  Call it only on a frame
+    the caller made: any frame planned over an RDD (a LogicalRDD) has
+    that RDD unpersisted."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)

@@ -101,26 +101,32 @@ def apply_blob_events(events: DataFrame, store: VectorStore,
     idempotent CDC apply.
 
     Semantics: last event per document_url wins (``seq`` orders events
-    within the batch).  Every touched url's old chunks are deleted —
+    within the batch).  Every touched url's old chunks are dropped —
     including re-creates, so a document shrinking from 5 chunks to 3
     leaves no stale tail (plain upsert merges by (url, chunk_id) and
-    would) — then surviving creates run the normal
-    parse → chunk → embed → upsert pipeline.
+    would) — and surviving creates run the normal parse → chunk → embed
+    pipeline.
 
-    The url list for the delete crosses the driver: bounded by the event
-    batch size (a trigger interval of blob notifications), not the
-    corpus, the same plan-metadata scale as bloom bitmaps."""
+    Cost: one merge, one rewrite per batch (``VectorStore.apply_changes``).
+    The batch's chunk and embedding rows are checkpointed once, so
+    parse → chunk → embed is evaluated once; each bucket hosting a
+    touched url is read once, loses the touched urls' rows (broadcast
+    anti-join), gains the new rows and is overwritten once.  Into a
+    store that does not exist yet the chunk rows are one plain write.
+
+    The url list crosses the driver (one url per event, deduplicated
+    there): bounded by the event batch size (a trigger interval of blob
+    notifications), not the corpus, the same plan-metadata scale as
+    bloom bitmaps."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("document_url").orderBy(F.desc("seq"))
     last = (events.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1))
-    touched = [r["document_url"]
-               for r in last.select("document_url").collect()]
-    if touched and store.exists():
-        store.delete_documents(touched)
+    # every url with an event is touched: no window needed for the list
+    touched = list(dict.fromkeys(
+        r[0] for r in events.select("document_url").collect()))
     creates = (last.filter(F.col("op") == "create")
                .select("document_url", "content"))
-    chunks = add_embeddings(blobs_to_chunks(creates, cfg), cfg=cfg)
-    if chunks.limit(1).count():
-        store.upsert(chunks)
+    store.apply_changes(
+        touched, add_embeddings(blobs_to_chunks(creates, cfg), cfg=cfg))

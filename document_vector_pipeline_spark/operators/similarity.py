@@ -25,7 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from document_vector_pipeline_spark.functions.localrel import local_df
+from document_vector_pipeline_spark.functions.localrel import (
+    local_df,
+    release_checkpoint,
+)
 
 from document_vector_pipeline_spark.functions.hashing import md5_long
 from document_vector_pipeline_spark.functions.vectors import cosine_similarity
@@ -816,6 +819,10 @@ def pq_ann(corpus: DataFrame, queries: DataFrame, k: int = 10,
     fused scorer.)  Spark inserts the partial limit only for k below
     ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000): above it
     results stay correct, but every scored row reaches the exchange.
+    When the codebook is trained here (``use_udf`` with no ``cb``), the
+    scoring scan runs before the function returns, over the cached
+    fixed-point corpus that training used, and that cache is released;
+    the returned rank window reads the scorer's cut rows.
     Recall < 1 by design; scores are exact integers scaled once at the
     end."""
     sub = dim // n_sub
@@ -903,7 +910,14 @@ def pq_ann(corpus: DataFrame, queries: DataFrame, k: int = 10,
                         kind="mergesort").head(k))
                 yield pd.concat(outs, ignore_index=True)
 
-        return _ranked(df.mapInPandas(run, schema), k)
+        scored = df.mapInPandas(run, schema)
+        if v6df is not None:
+            # score now, while the fixed-point corpus is cached, then
+            # release it: the rank window reads only the <= k rows per
+            # (batch, query) the scorer kept
+            scored = scored.localCheckpoint(eager=True)
+            release_checkpoint(v6df)
+        return _ranked(scored, k)
     code_cols = []
     for m in range(n_sub):
         s_m = F.slice(F.col("v6"), m * sub + 1, sub)

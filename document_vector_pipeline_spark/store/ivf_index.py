@@ -443,7 +443,12 @@ class IVFIndex:
             F.countDistinct(F.col(id_col)).alias("n_ids"),
             F.sum(F.when(F.col(id_col).isNull(), 1).otherwise(0))
             .alias("n_null_ids"),
-            F.count(F.col(vec_col)).alias("n_vec")).collect()[0]
+            F.count(F.col(vec_col)).alias("n_vec"),
+            # the idmap buckets the vectored rows hash into (collect_set
+            # skips the NULL of a vector-less row)
+            F.collect_set(F.when(F.col(vec_col).isNotNull(),
+                                 self._bucket_expr(F.col(id_col))))
+            .alias("bkts")).collect()[0]
         # distinct id GROUPS including the null group — countDistinct
         # skips nulls, and a batch with two null ids is the same
         # ambiguity as two equal ids
@@ -487,18 +492,19 @@ class IVFIndex:
         # materialize once: reused for cell lists, both merges, both writes
         assigned = assigned.localCheckpoint(eager=True)
         ids = assigned.select("vec_id").distinct()
-
-        # ONE collect over the checkpointed batch yields both the
-        # touched idmap buckets and the new home cells (they were two
-        # separate jobs)
-        meta = (assigned.select(self._bucket_expr(F.col("vec_id")),
-                                "centroid_id").distinct().collect())
-        bkts = sorted({r["bucket"] for r in meta})
-        new_cells = {r["centroid_id"] for r in meta}
+        bkts = sorted(ing["bkts"])
         imap = (self._read_idmap()
                 .filter(F.col("bucket").isin(bkts)))
-        old_cells = {r[0] for r in imap.join(F.broadcast(ids), "vec_id")
-                     .select("centroid_id").distinct().collect()}
+        # ONE collect yields the new home cells (from the checkpointed
+        # batch) and the replaced ids' old cells (from the idmap pruned
+        # to the batch's buckets), told apart by a tag
+        cells = (assigned.select(F.lit(True).alias("new"), "centroid_id")
+                 .unionByName(imap.join(F.broadcast(ids), "vec_id")
+                              .select(F.lit(False).alias("new"),
+                                      "centroid_id"))
+                 .distinct().collect())
+        new_cells = {r["centroid_id"] for r in cells if r["new"]}
+        old_cells = {r["centroid_id"] for r in cells if not r["new"]}
         affected = sorted(old_cells | new_cells)
 
         cur = (self._read_cells()
@@ -514,12 +520,15 @@ class IVFIndex:
             lambda: cur.unionByName(assigned).localCheckpoint(eager=True),
             lambda: (cur_map.unionByName(new_map)
                      .localCheckpoint(eager=True)))
-        # every batch bucket receives >= 1 new row, so none can empty
+        # every new cell and batch bucket receives >= 1 new row, so
+        # only an old cell no new row lands in can empty
         run_parallel(
             lambda: self._overwrite_partitions(merged, self._cells,
-                                               "centroid_id", affected),
+                                               "centroid_id", affected,
+                                               filled=new_cells),
             lambda: self._overwrite_partitions(merged_map, self._idmap,
-                                               "bucket", bkts))
+                                               "bucket", bkts,
+                                               filled=bkts))
 
     def delete(self, ids) -> None:
         """Remove vectors from the index by id: the idmap sidecar (pruned
@@ -527,14 +536,20 @@ class IVFIndex:
         partitions are rewritten without the victims, and cells/buckets
         that empty out have their directories dropped through the Hadoop
         FS.  Bounded by the affected cells, never a corpus scan."""
-        if not isinstance(ids, DataFrame):
-            ids = self.spark.createDataFrame([(int(i),) for i in ids],
-                                             "vec_id long")
-        ids = ids.select(F.col(ids.columns[0]).alias("vec_id")).distinct()
+        if isinstance(ids, DataFrame):
+            ids = ids.select(F.col(ids.columns[0]).alias("vec_id")).distinct()
+        else:
+            # a JVM local relation: read by every job below, never by a
+            # Python worker
+            ids = local_df(self.spark,
+                           [(i,) for i in sorted({int(i) for i in ids})],
+                           "vec_id long")
         self._ensure_idmap()
-        bkts = [r[0] for r in
-                ids.select(self._bucket_expr(F.col("vec_id")))
-                .distinct().collect()]
+        # deduplicated driver-side: no shuffle, and no job at all for a
+        # local id list
+        bkts = sorted({r[0] for r in
+                       ids.select(self._bucket_expr(F.col("vec_id")))
+                       .collect()})
         imap = (self._read_idmap()
                 .filter(F.col("bucket").isin(bkts)))
         affected = sorted({r[0] for r in imap.join(F.broadcast(ids), "vec_id")
@@ -637,18 +652,23 @@ class IVFIndex:
         return True
 
     def _overwrite_partitions(self, df: DataFrame, path: str,
-                              part_col: str, affected: list) -> None:
+                              part_col: str, affected: list,
+                              filled=()) -> None:
         """Dynamic-partition-overwrite ``df`` into ``path`` (only the
         partitions present in ``df`` are replaced), then drop the
         directories of ``affected`` partitions that received no rows —
         dynamic overwrite alone would leave their stale files in place.
+        ``filled`` names partitions the caller knows receive rows; when
+        it covers ``affected`` no job asks which ones are present.
         ``df`` must be checkpoint-materialized (it was derived from
         ``path`` and Spark refuses a self-overwriting file plan)."""
-        present = {r[0] for r in df.select(part_col).distinct().collect()}
+        unknown = set(affected) - set(filled)
+        present = ({r[0] for r in df.select(part_col).distinct().collect()}
+                   if unknown else set())
         (df.repartition(part_col).write
          .partitionBy(part_col).mode("overwrite")
          .option("partitionOverwriteMode", "dynamic").parquet(path))
-        for p in set(affected) - present:
+        for p in unknown - present:
             self._fs_delete(os.path.join(path, f"{part_col}={p}"))
 
     @staticmethod

@@ -73,7 +73,10 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from document_vector_pipeline_spark.functions.localrel import local_df
+from document_vector_pipeline_spark.functions.localrel import (
+    local_df,
+    release_checkpoint,
+)
 from document_vector_pipeline_spark.functions.par import run_parallel
 from document_vector_pipeline_spark.operators import retrieval
 
@@ -378,9 +381,11 @@ class TextIndex:
                         | (F.col("seg") >= F.col("__ts_seq")))
                 .drop("__ts_seq"))
 
-    def _old_live(self, victims: DataFrame) -> DataFrame:
+    def _old_live(self, victims: DataFrame,
+                  dbkts: list[int] | None = None) -> DataFrame:
         """The victims' LIVE (doc_id, dl) rows in the current manifest's
         segments — the doclens read is pruned to the victims' dbuckets
+        (``dbkts`` when the caller already has them, else one collect)
         and semi-joined on the (batch-sized, broadcast) victim set.
         Checkpointed: it feeds both the stats delta and the tombstone
         write without re-scanning."""
@@ -388,9 +393,11 @@ class TextIndex:
         empty = self.spark.createDataFrame([], "doc_id long, dl int")
         if m is None or not m["segments"]:
             return empty
-        dbkts = [r[0] for r in
-                 victims.select(self._dbucket(F.col("doc_id")).alias("b"))
-                 .distinct().collect()]
+        if dbkts is None:
+            # deduplicated driver-side: no shuffle, and no job at all
+            # for a local id list
+            dbkts = sorted({r[0] for r in victims.select(
+                self._dbucket(F.col("doc_id"))).collect()})
         if not dbkts:
             return empty
         old = (self._doclens_df()
@@ -1162,12 +1169,7 @@ class TextIndex:
         (score_tf recomputes per-term df from the same relation, so
         selection and scoring agree by construction); everything
         between is bounded by sources x their vocabulary."""
-        if not isinstance(doc_ids, DataFrame):
-            doc_ids = self.spark.createDataFrame(
-                [(int(i),) for i in doc_ids], "doc_id long")
-        src = (doc_ids.select(F.col(doc_ids.columns[0]).cast("long")
-                              .alias("doc_id")).distinct()
-               .localCheckpoint(eager=True))
+        src = self._id_frame(doc_ids)
         vb = [r[0] for r in src.select(
             self._dbucket(F.col("doc_id")).alias("b")).distinct().collect()]
         stf = (self._live(self._tvecs_df()
@@ -1284,6 +1286,19 @@ class TextIndex:
                 .groupBy("query_id", facet_col)
                 .agg(F.count(F.lit(1)).cast("long").alias("n_docs")))
 
+    def _id_frame(self, doc_ids) -> DataFrame:
+        """Distinct ``doc_id long`` frame of an id list or a one-column
+        DataFrame.  A list becomes a JVM local relation (no Python RDD,
+        nothing to checkpoint); a DataFrame is checkpointed once, since
+        every later job reads it."""
+        if isinstance(doc_ids, DataFrame):
+            return (doc_ids.select(F.col(doc_ids.columns[0]).cast("long")
+                                   .alias("doc_id")).distinct()
+                    .localCheckpoint(eager=True))
+        return local_df(self.spark, [(i,) for i in
+                                     sorted({int(i) for i in doc_ids})],
+                        "doc_id long")
+
     def upsert(self, docs: DataFrame, id_col: str = "doc_id",
                text_col: str = "text") -> None:
         """Per-document replace, O(batch): the batch becomes a NEW
@@ -1292,94 +1307,82 @@ class TextIndex:
         tombstone — the tombstone set tracks replacements, not ingest
         volume); corpus statistics move by the exact (old live out, new
         in) delta inside the same manifest commit.  No existing segment
-        file is touched; the manifest write is the last step."""
-        # a duplicated id in the batch would write two live posting sets
-        # for one document (df/stats double-counted, dl nondeterministic
-        # via F.first) — refuse it before anything is WRITTEN; the check
-        # is one action over the batch-sized frame, never the index, and
-        # it overlaps the tf checkpoint (§2.6 — both only read the
-        # batch; localCheckpoint caches, it writes no index state, so a
-        # failed check still aborts before any segment/manifest write)
+        file is touched; the manifest write is the last step.  Every
+        checkpoint the method makes is released when it returns or
+        raises."""
         m = self._manifest_required()
         seg = m["segments"][-1] + 1
-
-        def dup_check():
-            if (docs.groupBy(F.col(id_col).cast("long")).count()
-                    .filter(F.col("count") > 1).limit(1).count()):
-                raise ValueError("upsert batch contains duplicate id rows")
-
-        # a refused batch must not leak its tf checkpoint's cached
-        # blocks (round-13 ADVICE): capture the frame as it
-        # materializes so the except path can unpersist it
         made: list = []
 
-        def tf_ck():
-            df = self._tf_of(docs, id_col, text_col)\
-                .localCheckpoint(eager=True)
+        def ck(df: DataFrame) -> DataFrame:
+            df = df.localCheckpoint(eager=True)
             made.append(df)
             return df
 
         try:
-            _, new_tf = run_parallel(dup_check, tf_ck)
-        except Exception:
+            new_tf = ck(self._tf_of(docs, id_col, text_col))
+            new_dl = ck(self._doclens_from_tf(docs, id_col, new_tf))
+            # new_dl has one row per batch row, so ONE aggregate over it
+            # answers the duplicate-id check, the new side of the stats
+            # delta and the dbuckets the old-side doclens read prunes to.
+            # A duplicated id would write two live posting sets for one
+            # document (df/stats double-counted, dl nondeterministic via
+            # F.first) — refused here, before anything is WRITTEN.
+            # countDistinct skips nulls; two null ids are the same
+            # ambiguity as two equal ids.
+            a = new_dl.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.countDistinct("doc_id").alias("n_ids"),
+                F.max(F.col("doc_id").isNull().cast("int")).alias("nulls"),
+                F.coalesce(F.sum(F.col("dl").cast("long")),
+                           F.lit(0)).alias("t"),
+                F.collect_set("dbucket").alias("dbkts")).collect()[0]
+            if a["n"] != a["n_ids"] + (a["nulls"] or 0):
+                raise ValueError("upsert batch contains duplicate id rows")
+            old = self._old_live(new_dl.select("doc_id"), sorted(a["dbkts"]))
+            made.append(old)
+            # the old-side count and the new segment's writes read only
+            # checkpointed frames — overlap them (§2.6); tombstones
+            # (conditional on the delta) and the commit stay sequential
+            (o_n, o_t), _ = run_parallel(
+                lambda: self._count_len(old),
+                lambda: self._write_segment(new_tf, new_dl, seg))
+            v = m["version"] + 1
+            tombs, ts_rows = list(m["tombstones"]), m["n_tombstone_rows"]
+            if o_n:
+                tombs.append(self._write_tombstones(
+                    old.select("doc_id").distinct(), seg, v))
+                ts_rows += o_n
+            self._commit(v, "upsert", m["segments"] + [seg], tombs,
+                         ts_rows, m["n_docs"] - o_n + a["n"],
+                         m["total_len"] - o_t + a["t"])
+        finally:
             for df in made:
-                df.unpersist()
-            raise
-        new_dl = self._doclens_from_tf(docs, id_col, new_tf)\
-            .localCheckpoint(eager=True)
-        old = self._old_live(new_dl.select("doc_id").distinct())
-        # one aggregate job covers both sides of the stats delta
-        both = (old.select(F.lit(0).alias("g"), "dl")
-                .unionByName(new_dl.select(F.lit(1).alias("g"), "dl")))
-
-        def stats_delta():
-            return {r["g"]: r for r in
-                    both.groupBy("g")
-                    .agg(F.count(F.lit(1)).alias("n"),
-                         F.coalesce(F.sum(F.col("dl").cast("long")),
-                                    F.lit(0)).alias("t")).collect()}
-
-        # the stats-delta aggregate and the new segment's writes read
-        # only checkpointed frames — overlap them (§2.6); tombstones
-        # (conditional on the delta) and the commit stay sequential
-        d, _ = run_parallel(stats_delta,
-                            lambda: self._write_segment(new_tf, new_dl,
-                                                        seg))
-        o_n, o_t = ((d[0]["n"], d[0]["t"]) if 0 in d else (0, 0))
-        n_n, n_t = ((d[1]["n"], d[1]["t"]) if 1 in d else (0, 0))
-        v = m["version"] + 1
-        tombs, ts_rows = list(m["tombstones"]), m["n_tombstone_rows"]
-        if o_n:
-            tombs.append(self._write_tombstones(
-                old.select("doc_id").distinct(), seg, v))
-            ts_rows += o_n
-        self._commit(v, "upsert", m["segments"] + [seg], tombs, ts_rows,
-                     m["n_docs"] - o_n + n_n, m["total_len"] - o_t + n_t)
+                release_checkpoint(df)
 
     def delete(self, doc_ids) -> None:
         """Tombstone documents, O(batch): no segment is read or
         rewritten; stats move by the victims' live (count, dl) sum.
         Ids with nothing live (never ingested, or already deleted) are
         a complete no-op — no commit, no empty tombstone file."""
-        if not isinstance(doc_ids, DataFrame):
-            doc_ids = self.spark.createDataFrame(
-                [(int(i),) for i in doc_ids], "doc_id long")
-        victims = (doc_ids.select(F.col(doc_ids.columns[0]).cast("long")
-                                  .alias("doc_id")).distinct()
-                   .localCheckpoint(eager=True))
+        victims = self._id_frame(doc_ids)
         m = self._manifest_required()
         old = self._old_live(victims)
-        o_n, o_t = self._count_len(old)
-        if o_n == 0:
-            return
-        seq = m["segments"][-1] + 1          # dead in every live segment
-        v = m["version"] + 1
-        name = self._write_tombstones(old.select("doc_id").distinct(),
-                                      seq, v)
-        self._commit(v, "delete", m["segments"],
-                     m["tombstones"] + [name],
-                     m["n_tombstone_rows"] + o_n,
-                     m["n_docs"] - o_n, m["total_len"] - o_t)
+        try:
+            o_n, o_t = self._count_len(old)
+            if o_n == 0:
+                return
+            seq = m["segments"][-1] + 1      # dead in every live segment
+            v = m["version"] + 1
+            name = self._write_tombstones(old.select("doc_id").distinct(),
+                                          seq, v)
+            self._commit(v, "delete", m["segments"],
+                         m["tombstones"] + [name],
+                         m["n_tombstone_rows"] + o_n,
+                         m["n_docs"] - o_n, m["total_len"] - o_t)
+        finally:
+            release_checkpoint(old)
+            release_checkpoint(victims)
 
     def phrase_search(self, phrases: DataFrame, k: int = 10) -> DataFrame:
         """Exact phrase search over the positional postings —

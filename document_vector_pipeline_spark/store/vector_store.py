@@ -17,12 +17,19 @@ Parity targets:
 - Vector index: cosine, with a QuantizedFlat-style int8 quantized column
   maintained alongside the float vector (CosmosDBClientWrapper.cs:117-146).
 
-Scale design: upsert/delete never rewrite the whole store — they compute
-the affected buckets from the incoming keys (a tiny distinct-collect),
-read ONLY those partitions back (partition pruning on `bucket`), merge via
-left-anti join co-partitioned on the bucket key, and rewrite just those
-directories with dynamic partition overwrite.  At 100 TB with 64-4096
-buckets, an upsert of one document touches 1/N of the store.
+Scale design: every mutation (upsert, replace_documents, delete,
+the CDC apply_changes) goes through ONE bucket-merge body, ``_merge``,
+and never rewrites the whole store.  The affected buckets come from the
+incoming keys (a tiny distinct-collect) or from the url list (computed
+driver-side, no job); only those partitions
+are read back (partition pruning on `bucket`), once; the dropped keys or
+urls leave through a left-anti join, the new rows are unioned in, and
+each affected directory is rewritten once with dynamic partition
+overwrite.  Buckets left with no rows are cleared.  A CDC batch that
+deletes some documents and re-creates others is therefore ONE rewrite
+of its buckets, not a delete rewrite followed by an upsert rewrite.  At
+100 TB with 64-4096 buckets, an upsert of one document touches 1/N of
+the store.
 """
 
 from __future__ import annotations
@@ -32,7 +39,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from document_vector_pipeline_spark.functions.localrel import local_df
+from document_vector_pipeline_spark.functions.localrel import (
+    local_df,
+    release_checkpoint,
+)
 from pyspark.sql import types as T
 
 from document_vector_pipeline_spark.config import DEFAULT_CONFIG, PipelineConfig
@@ -110,20 +120,53 @@ class VectorStore:
          .mode("overwrite")
          .parquet(self.path))
 
+    def _bucket_files(self, bucket: int) -> frozenset:
+        d = os.path.join(self.path, f"bucket={bucket}")
+        return frozenset(os.listdir(d)) if os.path.isdir(d) else frozenset()
+
+    def _merge(self, incoming: DataFrame | None, drop: DataFrame,
+               on: list[str], buckets: list[int]) -> None:
+        """The one bucket-merge body of every store mutation: read the
+        affected ``buckets`` once, left-anti join away the rows matching
+        ``drop`` on ``on``, union ``incoming`` (rows of those buckets
+        only) and overwrite each bucket once.  A bucket left with no rows
+        gets no output under dynamic overwrite, so its file listing is
+        unchanged after the write; those are cleared through the engine.
+        The plan reads the files it replaces — legal under dynamic
+        overwrite, which stages output and swaps whole directories only
+        at commit."""
+        before = {b: self._bucket_files(b) for b in buckets}
+        merged = (self.read().filter(F.col("bucket").isin(buckets))
+                  .join(drop, on, "left_anti"))
+        if incoming is not None:
+            merged = merged.unionByName(incoming)
+        self._overwrite_buckets(merged)
+        for b, files in before.items():
+            if files and self._bucket_files(b) == files:
+                self._clear_bucket(b)
+
+    def _buckets_of(self, incoming: DataFrame) -> list[int]:
+        return [r[0] for r in incoming.select("bucket").distinct().collect()]
+
     # ---- operations -------------------------------------------------------
 
     def upsert(self, chunks: DataFrame) -> None:
         """Idempotent merge on (document_url, id): incoming rows replace
         matching keys, other rows in the affected buckets are kept, and
-        untouched buckets are never read or written."""
+        untouched buckets are never read or written.  A first write
+        (no store yet) is one plain write."""
         incoming = self._normalize(chunks)
         if not self.exists():
             self._overwrite_buckets(incoming)
             return
-        buckets = [r["bucket"] for r in incoming.select("bucket").distinct().collect()]
-        current = self.read().filter(F.col("bucket").isin(buckets))
-        kept = current.join(incoming.select(*KEY).distinct(), list(KEY), "left_anti")
-        self._overwrite_buckets(kept.unionByName(incoming))
+        # checkpointed once: the bucket list, the drop keys and the union
+        # all read it, and none of them re-runs the caller's plan
+        incoming = incoming.localCheckpoint(eager=True)
+        try:
+            self._merge(incoming, incoming.select(*KEY).distinct(),
+                        list(KEY), self._buckets_of(incoming))
+        finally:
+            release_checkpoint(incoming)
 
     def replace_documents(self, chunks: DataFrame) -> DataFrame:
         """Per-document replace: every incoming document's PREVIOUS rows
@@ -138,19 +181,64 @@ class VectorStore:
         if not self.exists():
             self._overwrite_buckets(incoming)
             return self.spark.createDataFrame([], "document_url string, id string")
-        buckets = [r["bucket"] for r in
-                   incoming.select("bucket").distinct().collect()]
-        current = self.read().filter(F.col("bucket").isin(buckets))
-        docs = incoming.select("document_url").distinct()
-        kept = current.join(F.broadcast(docs), "document_url", "left_anti")
-        # materialized BEFORE the overwrite rewrites the files it reads
-        stale = (current.join(F.broadcast(docs), "document_url", "left_semi")
-                 .join(incoming.select(*KEY).distinct(), list(KEY),
-                       "left_anti")
-                 .select(*KEY)
-                 .localCheckpoint(eager=True))
-        self._overwrite_buckets(kept.unionByName(incoming))
+        incoming = incoming.localCheckpoint(eager=True)
+        try:
+            buckets = self._buckets_of(incoming)
+            docs = F.broadcast(incoming.select("document_url").distinct())
+            # materialized BEFORE the overwrite rewrites the files it reads
+            stale = (self.read().filter(F.col("bucket").isin(buckets))
+                     .join(docs, "document_url", "left_semi")
+                     .join(incoming.select(*KEY).distinct(), list(KEY),
+                           "left_anti")
+                     .select(*KEY)
+                     .localCheckpoint(eager=True))
+            self._merge(incoming, docs, ["document_url"], buckets)
+        finally:
+            release_checkpoint(incoming)
         return stale
+
+    def apply_changes(self, document_urls: list[str],
+                      chunks: DataFrame | None = None) -> None:
+        """CDC apply in ONE bucket pass: every row of each url in
+        ``document_urls`` is dropped, then ``chunks``' rows land.  A url
+        with no chunks is a delete; a re-created document that shrank
+        from 5 chunks to 3 keeps no stale tail.  Every chunk row must
+        belong to a url in ``document_urls``; one that does not fails
+        the apply before anything is written.  The chunk rows are
+        checkpointed once (the caller's parse → chunk → embed plan runs
+        once), the urls' buckets are computed driver-side from the local
+        url list (no job), and each of those buckets is read and
+        rewritten once.  Into a store that does not exist yet,
+        ``chunks`` is one plain write."""
+        urls = list(dict.fromkeys(document_urls))
+        incoming = None
+        if chunks is not None:
+            url = F.col("document_url")
+            listed = url.isin([u for u in urls if u is not None])
+            if None in urls:
+                listed = listed | url.isNull()
+            incoming = self._normalize(chunks.withColumn(
+                "document_url", F.when(listed, url).otherwise(F.raise_error(
+                    F.concat(F.lit("chunk row of a url not in "
+                                   "document_urls: "), url)))))
+        if not self.exists():
+            if incoming is not None:
+                self._overwrite_buckets(incoming)
+            return
+        if not urls:
+            return
+        local = local_df(self.spark, [(u,) for u in urls],
+                         "document_url string")
+        buckets = sorted({r[0] for r in local.select(
+            self._bucket(F.col("document_url"))).collect()})
+        if incoming is not None:
+            incoming = incoming.localCheckpoint(eager=True)
+        try:
+            self._merge(incoming, F.broadcast(local), ["document_url"],
+                        buckets)
+        finally:
+            if incoming is not None:
+                release_checkpoint(incoming)
 
     def append(self, chunks: DataFrame) -> None:
         """Blind-append fast path for keys KNOWN to be new (initial bulk
@@ -170,49 +258,14 @@ class VectorStore:
     def delete_documents(self, document_urls: list[str]) -> None:
         """Batch blob-delete: remove every chunk of each document in one
         distributed pass (the CDC-batch variant of delete_document).  Only
-        the buckets hosting the deleted urls are read back and rewritten."""
-        if not self.exists() or not document_urls:
-            return
-        urls = (local_df(self.spark,
-                         [(u,) for u in document_urls],
-                         "document_url string")
-                .withColumn("bucket", self._bucket(F.col("document_url"))))
-        buckets = [r["bucket"] for r in urls.select("bucket").distinct().collect()]
-        current = self.read().filter(F.col("bucket").isin(buckets))
-        kept = current.join(F.broadcast(urls.select("document_url")),
-                            "document_url", "left_anti")
-        # evaluate the survivor set BEFORE overwriting: `kept` reads the
-        # very files the overwrite replaces, so it must not re-run after.
-        left = {r["bucket"] for r in
-                kept.select("bucket").distinct().collect()}
-        self._overwrite_buckets(kept)
-        # buckets whose every row was deleted produce no output under
-        # dynamic overwrite; clear those stale directories through the
-        # engine (object-store-safe: no direct filesystem deletes).
-        for b in set(buckets) - left:
-            self._clear_bucket(b)
+        the buckets hosting the deleted urls are read back and rewritten;
+        a bucket the delete empties is cleared."""
+        self.apply_changes(document_urls)
 
     def delete_document(self, document_url: str) -> None:
         """Blob-delete event: remove every chunk of the document.
         (Implements the reference's TODO, BlobTriggerFunction.cs:163-169.)"""
-        if not self.exists():
-            return
-        bucket = self.spark.range(1).select(
-            self._bucket(F.lit(document_url))).first()[0]
-        current = self.read().filter(F.col("bucket") == bucket)
-        kept = current.filter(F.col("document_url") != document_url)
-        # evaluate before overwriting the files `kept` reads from
-        kept_empty = kept.isEmpty()
-        # overwrite just this bucket directory (it may become empty)
-        (kept.repartition(1).write
-         .partitionBy("bucket")
-         .option("partitionOverwriteMode", "dynamic")
-         .mode("overwrite")
-         .parquet(self.path))
-        if kept_empty:
-            # dynamic overwrite won't touch a partition with no output rows;
-            # clear the stale directory through the engine.
-            self._clear_bucket(bucket)
+        self.delete_documents([document_url])
 
     def _clear_bucket(self, bucket: int) -> None:
         """Empty a bucket directory via the engine's committer, not direct

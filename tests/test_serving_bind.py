@@ -164,3 +164,89 @@ def test_empty_batches_return_typed_empty_frames(spark, served):
         assert empty.collect() == []
         assert empty.schema.simpleString() == schema
         assert python_scans(empty) == 0
+
+
+# ---- id lists into index maintenance and more_like_this -------------------
+
+DELETE_IDS = [5, 17, 17, 42, 301, 999999]      # a repeat and a never-seen id
+
+
+def _spy_actions(monkeypatch, spark):
+    """Record python_scans of every frame collected or checkpointed."""
+    cls = type(spark.range(1))
+    seen = []
+    for name in ("collect", "localCheckpoint"):
+        real = getattr(cls, name)
+
+        def spy(self, *a, _real=real, **kw):
+            seen.append(python_scans(self))
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(cls, name, spy)
+    return seen
+
+
+@pytest.fixture(scope="module")
+def twins(spark, docs_small, embeddings_small, tmp_path_factory):
+    """Two identical (text index with term vectors, IVF index) pairs,
+    built once and copied: one takes id lists, the other id frames."""
+    import shutil
+
+    root = tmp_path_factory.mktemp("twins")
+    docs = docs_small.select("doc_id", "text").filter(F.col("doc_id") < 400)
+    ti = TextIndex(spark, str(root / "ti_list"), n_term_buckets=8,
+                   n_doc_buckets=2, term_vectors=True)
+    ti.build(docs)
+    vi = IVFIndex(spark, str(root / "vi_list"), n_centroids=N_CENTROIDS)
+    vi.build(embeddings_small)
+    shutil.copytree(ti.path, str(root / "ti_df"))
+    shutil.copytree(vi.path, str(root / "vi_df"))
+    return {"list": (ti, vi),
+            "df": (TextIndex(spark, str(root / "ti_df"), n_term_buckets=8,
+                             n_doc_buckets=2, term_vectors=True),
+                   IVFIndex(spark, str(root / "vi_df"),
+                            n_centroids=N_CENTROIDS))}
+
+
+def _ivf_state(vi):
+    cells = sorted((r.vec_id, r.centroid_id)
+                   for r in vi._read_cells().select("vec_id", "centroid_id")
+                   .collect())
+    idmap = sorted(map(tuple, vi._read_idmap()
+                       .select("vec_id", "centroid_id", "bucket").collect()))
+    return cells, idmap
+
+
+def test_more_like_this_id_list_reads_no_python_rdd(spark, twins,
+                                                    monkeypatch):
+    ti, _ = twins["list"]
+    want = sorted(map(tuple, ti.more_like_this(
+        spark.createDataFrame([(2,), (4,)], "doc_id long"), m=3,
+        k=K).collect()))
+    seen = _spy_actions(monkeypatch, spark)
+    out = ti.more_like_this([2, 4, 4], m=3, k=K)
+    assert python_scans(out) == 0 and seen and not any(seen)
+    assert sorted(map(tuple, out.collect())) == want
+
+
+def test_index_deletes_by_id_list_read_no_python_rdd(spark, twins,
+                                                     monkeypatch):
+    ti_l, vi_l = twins["list"]
+    ti_d, vi_d = twins["df"]
+    frame = spark.createDataFrame([(i,) for i in DELETE_IDS], "vec_id long")
+    ti_d.delete(frame)
+    vi_d.delete(frame)
+    seen = _spy_actions(monkeypatch, spark)
+    ti_l.delete(DELETE_IDS)
+    vi_l.delete(DELETE_IDS)
+    monkeypatch.undo()
+    assert seen and not any(seen)
+    assert ti_l._manifest()["n_docs"] == ti_d._manifest()["n_docs"]
+    assert sorted(map(tuple, ti_l.stats().collect())) == \
+        sorted(map(tuple, ti_d.stats().collect()))
+    terms = _term_frame(spark)
+    assert sorted(map(tuple, ti_l.search(terms, k=K).collect())) == \
+        sorted(map(tuple, ti_d.search(terms, k=K).collect()))
+    assert _ivf_state(vi_l) == _ivf_state(vi_d)
+    gone = {r.vec_id for r in vi_l._read_cells().select("vec_id").collect()}
+    assert not gone & set(DELETE_IDS)

@@ -1,5 +1,7 @@
 """Vector store: upsert idempotence, key replacement, delete, search."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -355,6 +357,112 @@ def test_replace_documents_drops_stale_chunks_and_reports_them(spark, store):
     stale2 = store2.replace_documents(
         _chunks(spark, [("u9", 0, "x", 0, [1.0, 0.0, 0.0, 0.0])]))
     assert stale2.count() == 0 and store2.read().count() == 1
+
+
+EVENT_SCHEMA = "seq long, op string, document_url string, content string"
+CDC_CFG = PipelineConfig(max_tokens_per_chunk=4, embedding_dimensions=8,
+                         store_buckets=4)
+
+
+def _words(n, tag):
+    return " ".join(f"{tag}{i}" for i in range(n))
+
+
+def _store_state(store):
+    return sorted(
+        (r.document_url, r.id, r.chunk_text, tuple(r.embedding),
+         tuple(r.embedding_q8), r.embedding_norm, r.page_number, r.bucket)
+        for r in store.read().collect())
+
+
+def _two_pass(events, store, cfg):
+    """The CDC apply as two store rewrites: delete every touched url,
+    then upsert the chunks of each url whose last event is a create."""
+    from document_vector_pipeline_spark.operators.embed import add_embeddings
+    from document_vector_pipeline_spark.operators.pipeline import (
+        blobs_to_chunks,
+    )
+
+    last = {}
+    for seq, op, url, content in sorted(events):
+        last[url] = (op, content)
+    if store.exists():
+        store.delete_documents(sorted(last))
+    creates = [(u, c) for u, (op, c) in sorted(last.items())
+               if op == "create"]
+    blobs = store.spark.createDataFrame(creates,
+                                        "document_url string, content string")
+    store.upsert(add_embeddings(blobs_to_chunks(blobs, cfg), cfg=cfg))
+
+
+def test_apply_blob_events_one_merge_equals_two_pass_oracle(
+        spark, tmp_path, monkeypatch):
+    """One mixed CDC batch through apply_blob_events equals delete-then-
+    upsert on a twin store, and reaches the store's parquet write once:
+    a re-create that shrinks 5 chunks to 3, a delete of a url never
+    ingested, a create with empty content (zero chunks), a delete that
+    empties a whole bucket, and a first batch into a store that does not
+    exist yet."""
+    from document_vector_pipeline_spark.operators.pipeline import (
+        apply_blob_events,
+    )
+
+    writes = []
+    real_write = VectorStore._overwrite_buckets
+
+    def counting(self, df):
+        writes.append(self.path)
+        return real_write(self, df)
+
+    cfg = CDC_CFG
+    # store_buckets=4 homes: d0, d2, d4 -> 0; d5 -> 1 (alone);
+    # d3, d9 -> 2; d1, d7, d8 -> 3
+    first = [(1, "create", "mem://d0.txt", _words(25, "a")),
+             (2, "create", "mem://d1.txt", _words(10, "b")),
+             (3, "create", "mem://d2.txt", _words(10, "c")),
+             (4, "create", "mem://d3.txt", _words(10, "d")),
+             (5, "create", "mem://d5.txt", _words(10, "e"))]
+    batch = [(1, "create", "mem://d0.txt", _words(15, "f")),   # 5 -> 3
+             (2, "delete", "mem://d9.txt", None),              # never seen
+             (3, "create", "mem://d4.txt", ""),                # no chunks
+             (4, "delete", "mem://d5.txt", None),              # empties b=1
+             (5, "create", "mem://d7.txt", _words(10, "g")),   # new doc
+             (6, "create", "mem://d8.txt", _words(10, "h")),
+             (7, "delete", "mem://d8.txt", None)]              # last wins
+    got = VectorStore(spark, str(tmp_path / "got"), cfg)
+    want = VectorStore(spark, str(tmp_path / "want"), cfg)
+    homes = {r[0]: r[1] for r in spark.createDataFrame(
+        [(f"mem://d{i}.txt",) for i in range(10)], "u string")
+        .select("u", got._bucket(F.col("u"))).collect()}
+    assert [u for u, b in homes.items() if b == homes["mem://d5.txt"]] \
+        == ["mem://d5.txt"]
+
+    monkeypatch.setattr(VectorStore, "_overwrite_buckets", counting)
+    # a first batch into a store that does not exist yet: one write
+    apply_blob_events(spark.createDataFrame(first, EVENT_SCHEMA), got, cfg)
+    assert writes == [got.path]
+    _two_pass(first, want, cfg)
+    assert _store_state(got) == _store_state(want)
+    n_chunks = {}
+    for r in got.read().collect():
+        n_chunks[r.document_url] = n_chunks.get(r.document_url, 0) + 1
+    assert n_chunks["mem://d0.txt"] == 5
+
+    writes.clear()
+    apply_blob_events(spark.createDataFrame(batch, EVENT_SCHEMA), got, cfg)
+    assert writes == [got.path]
+    _two_pass(batch, want, cfg)
+    state = _store_state(got)
+    assert state == _store_state(want)
+    urls = {r[0] for r in state}
+    assert urls == {"mem://d0.txt", "mem://d1.txt", "mem://d2.txt",
+                    "mem://d3.txt", "mem://d7.txt"}
+    assert sorted(r[1] for r in state if r[0] == "mem://d0.txt") == \
+        ["0", "1", "2"]
+    # the emptied bucket's directory reads as empty
+    emptied = os.path.join(got.path, f"bucket={homes['mem://d5.txt']}")
+    assert os.path.isdir(emptied)
+    assert spark.read.parquet(emptied).count() == 0
 
 
 def test_hybrid_search_rank_window_is_partial_cut(spark, store):

@@ -508,6 +508,41 @@ def test_upsert_rejects_duplicate_ids_in_batch(spark, docs, tmp_path):
         idx.upsert(bad)
 
 
+def test_upsert_failure_leaves_no_cached_blocks(spark, docs, tmp_path,
+                                                monkeypatch):
+    """An upsert that raises after its tf checkpoint (here: while
+    deriving doc lengths; likewise a refused duplicate batch) releases
+    every checkpoint it made, writes nothing, and a later upsert still
+    works."""
+    idx = TextIndex(spark, str(tmp_path / "leak_ti"), n_term_buckets=4,
+                    n_doc_buckets=2)
+    idx.build(docs)
+    jsc = spark.sparkContext._jsc.sc()
+
+    def cached():
+        return {r.id() for r in jsc.getRDDStorageInfo()}
+
+    base = cached()
+    batch = spark.createDataFrame([(7, "fig fig grape"), (1, "kiwi")],
+                                  "doc_id long, text string")
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected after the tf checkpoint")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(TextIndex, "_doclens_from_tf", boom)
+        with pytest.raises(RuntimeError, match="injected"):
+            idx.upsert(batch)
+    assert cached() <= base
+    with pytest.raises(ValueError, match="duplicate"):
+        idx.upsert(batch.unionByName(batch))
+    assert cached() <= base
+    assert idx._manifest()["version"] == 0
+    idx.upsert(batch)
+    assert cached() <= base
+    assert idx._manifest()["n_docs"] == 7
+
+
 def test_upsert_of_new_docs_writes_no_tombstones(spark, tmp_path):
     """Streaming ingest upserts mostly BRAND-NEW chunk ids every
     microbatch; tombstoning them unconditionally would grow the
