@@ -225,7 +225,7 @@ class VectorStore:
             if incoming is not None:
                 self._overwrite_buckets(incoming)
             return
-        if not urls:
+        if not urls and incoming is None:
             return
         local = local_df(self.spark, [(u,) for u in urls],
                          "document_url string")

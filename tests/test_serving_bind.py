@@ -248,5 +248,5 @@ def test_index_deletes_by_id_list_read_no_python_rdd(spark, twins,
     assert sorted(map(tuple, ti_l.search(terms, k=K).collect())) == \
         sorted(map(tuple, ti_d.search(terms, k=K).collect()))
     assert _ivf_state(vi_l) == _ivf_state(vi_d)
-    gone = {r.vec_id for r in vi_l._read_cells().select("vec_id").collect()}
-    assert not gone & set(DELETE_IDS)
+    left = {r.vec_id for r in vi_l._read_cells().select("vec_id").collect()}
+    assert not left & set(DELETE_IDS)

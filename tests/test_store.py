@@ -463,6 +463,11 @@ def test_apply_blob_events_one_merge_equals_two_pass_oracle(
     emptied = os.path.join(got.path, f"bucket={homes['mem://d5.txt']}")
     assert os.path.isdir(emptied)
     assert spark.read.parquet(emptied).count() == 0
+    # a chunk row of a url the call does not list fails before any write
+    stray = _chunks(spark, [("mem://d2.txt", 0, "x", 0, [1.0] * 8)])
+    with pytest.raises(Exception, match="not in document_urls"):
+        got.apply_changes(["mem://d1.txt"], stray)
+    assert _store_state(got) == state
 
 
 def test_hybrid_search_rank_window_is_partial_cut(spark, store):
