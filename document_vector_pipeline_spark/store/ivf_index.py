@@ -523,12 +523,11 @@ class IVFIndex:
         # every new cell and batch bucket receives >= 1 new row, so
         # only an old cell no new row lands in can empty
         run_parallel(
-            lambda: self._overwrite_partitions(merged, self._cells,
-                                               "centroid_id", affected,
-                                               filled=new_cells),
+            lambda: self._overwrite_partitions(
+                merged, self._cells, "centroid_id",
+                sorted(old_cells - new_cells)),
             lambda: self._overwrite_partitions(merged_map, self._idmap,
-                                               "bucket", bkts,
-                                               filled=bkts))
+                                               "bucket", []))
 
     def delete(self, ids) -> None:
         """Remove vectors from the index by id: the idmap sidecar (pruned
@@ -538,18 +537,17 @@ class IVFIndex:
         FS.  Bounded by the affected cells, never a corpus scan."""
         if isinstance(ids, DataFrame):
             ids = ids.select(F.col(ids.columns[0]).alias("vec_id")).distinct()
+            bkts = ids.select(self._bucket_expr(F.col("vec_id"))).distinct()
         else:
             # a JVM local relation: read by every job below, never by a
-            # Python worker
+            # Python worker; its bucket list is deduplicated driver-side,
+            # so collecting it runs no job
             ids = local_df(self.spark,
                            [(i,) for i in sorted({int(i) for i in ids})],
                            "vec_id long")
+            bkts = ids.select(self._bucket_expr(F.col("vec_id")))
         self._ensure_idmap()
-        # deduplicated driver-side: no shuffle, and no job at all for a
-        # local id list
-        bkts = sorted({r[0] for r in
-                       ids.select(self._bucket_expr(F.col("vec_id")))
-                       .collect()})
+        bkts = sorted({r[0] for r in bkts.collect()})
         imap = (self._read_idmap()
                 .filter(F.col("bucket").isin(bkts)))
         affected = sorted({r[0] for r in imap.join(F.broadcast(ids), "vec_id")
@@ -652,23 +650,21 @@ class IVFIndex:
         return True
 
     def _overwrite_partitions(self, df: DataFrame, path: str,
-                              part_col: str, affected: list,
-                              filled=()) -> None:
+                              part_col: str, affected: list) -> None:
         """Dynamic-partition-overwrite ``df`` into ``path`` (only the
         partitions present in ``df`` are replaced), then drop the
         directories of ``affected`` partitions that received no rows —
         dynamic overwrite alone would leave their stale files in place.
-        ``filled`` names partitions the caller knows receive rows; when
-        it covers ``affected`` no job asks which ones are present.
-        ``df`` must be checkpoint-materialized (it was derived from
-        ``path`` and Spark refuses a self-overwriting file plan)."""
-        unknown = set(affected) - set(filled)
+        ``affected`` need only name the partitions that may empty; when
+        it is empty no job asks which ones are present.  ``df`` must be
+        checkpoint-materialized (it was derived from ``path`` and Spark
+        refuses a self-overwriting file plan)."""
         present = ({r[0] for r in df.select(part_col).distinct().collect()}
-                   if unknown else set())
+                   if affected else set())
         (df.repartition(part_col).write
          .partitionBy(part_col).mode("overwrite")
          .option("partitionOverwriteMode", "dynamic").parquet(path))
-        for p in unknown - present:
+        for p in set(affected) - present:
             self._fs_delete(os.path.join(path, f"{part_col}={p}"))
 
     @staticmethod

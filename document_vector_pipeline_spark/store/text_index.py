@@ -382,22 +382,17 @@ class TextIndex:
                 .drop("__ts_seq"))
 
     def _old_live(self, victims: DataFrame,
-                  dbkts: list[int] | None = None) -> DataFrame:
+                  dbkts: list[int]) -> DataFrame:
         """The victims' LIVE (doc_id, dl) rows in the current manifest's
         segments — the doclens read is pruned to the victims' dbuckets
-        (``dbkts`` when the caller already has them, else one collect)
-        and semi-joined on the (batch-sized, broadcast) victim set.
+        ``dbkts`` and semi-joined on the (batch-sized, broadcast) victim
+        set.
         Checkpointed: it feeds both the stats delta and the tombstone
         write without re-scanning."""
         m = self._manifest()
         empty = self.spark.createDataFrame([], "doc_id long, dl int")
         if m is None or not m["segments"]:
             return empty
-        if dbkts is None:
-            # deduplicated driver-side: no shuffle, and no job at all
-            # for a local id list
-            dbkts = sorted({r[0] for r in victims.select(
-                self._dbucket(F.col("doc_id"))).collect()})
         if not dbkts:
             return empty
         old = (self._doclens_df()
@@ -1169,9 +1164,7 @@ class TextIndex:
         (score_tf recomputes per-term df from the same relation, so
         selection and scoring agree by construction); everything
         between is bounded by sources x their vocabulary."""
-        src = self._id_frame(doc_ids)
-        vb = [r[0] for r in src.select(
-            self._dbucket(F.col("doc_id")).alias("b")).distinct().collect()]
+        src, vb = self._id_frame(doc_ids)
         stf = (self._live(self._tvecs_df()
                           .filter(F.col("vbucket").isin(vb))
                           .join(F.broadcast(src), "doc_id", "left_semi"))
@@ -1286,18 +1279,24 @@ class TextIndex:
                 .groupBy("query_id", facet_col)
                 .agg(F.count(F.lit(1)).cast("long").alias("n_docs")))
 
-    def _id_frame(self, doc_ids) -> DataFrame:
+    def _id_frame(self, doc_ids) -> tuple[DataFrame, list[int]]:
         """Distinct ``doc_id long`` frame of an id list or a one-column
-        DataFrame.  A list becomes a JVM local relation (no Python RDD,
-        nothing to checkpoint); a DataFrame is checkpointed once, since
-        every later job reads it."""
+        DataFrame, and the sorted dbuckets its ids hash into.  A list
+        becomes a JVM local relation (no Python RDD, nothing to
+        checkpoint) whose buckets are deduplicated driver-side, so no
+        job runs; a DataFrame is checkpointed once, since every later
+        job reads it, and one job collects its distinct buckets."""
         if isinstance(doc_ids, DataFrame):
-            return (doc_ids.select(F.col(doc_ids.columns[0]).cast("long")
-                                   .alias("doc_id")).distinct()
-                    .localCheckpoint(eager=True))
-        return local_df(self.spark, [(i,) for i in
-                                     sorted({int(i) for i in doc_ids})],
-                        "doc_id long")
+            ids = (doc_ids.select(F.col(doc_ids.columns[0]).cast("long")
+                                  .alias("doc_id")).distinct()
+                   .localCheckpoint(eager=True))
+            bkts = ids.select(self._dbucket(F.col("doc_id"))).distinct()
+        else:
+            ids = local_df(self.spark, [(i,) for i in
+                                        sorted({int(i) for i in doc_ids})],
+                           "doc_id long")
+            bkts = ids.select(self._dbucket(F.col("doc_id")))
+        return ids, sorted({r[0] for r in bkts.collect()})
 
     def upsert(self, docs: DataFrame, id_col: str = "doc_id",
                text_col: str = "text") -> None:
@@ -1365,9 +1364,9 @@ class TextIndex:
         rewritten; stats move by the victims' live (count, dl) sum.
         Ids with nothing live (never ingested, or already deleted) are
         a complete no-op — no commit, no empty tombstone file."""
-        victims = self._id_frame(doc_ids)
+        victims, dbkts = self._id_frame(doc_ids)
         m = self._manifest_required()
-        old = self._old_live(victims)
+        old = self._old_live(victims, dbkts)
         try:
             o_n, o_t = self._count_len(old)
             if o_n == 0:

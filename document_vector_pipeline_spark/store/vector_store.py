@@ -159,14 +159,8 @@ class VectorStore:
         if not self.exists():
             self._overwrite_buckets(incoming)
             return
-        # checkpointed once: the bucket list, the drop keys and the union
-        # all read it, and none of them re-runs the caller's plan
-        incoming = incoming.localCheckpoint(eager=True)
-        try:
-            self._merge(incoming, incoming.select(*KEY).distinct(),
-                        list(KEY), self._buckets_of(incoming))
-        finally:
-            release_checkpoint(incoming)
+        self._merge(incoming, incoming.select(*KEY).distinct(),
+                    list(KEY), self._buckets_of(incoming))
 
     def replace_documents(self, chunks: DataFrame) -> DataFrame:
         """Per-document replace: every incoming document's PREVIOUS rows
@@ -181,20 +175,16 @@ class VectorStore:
         if not self.exists():
             self._overwrite_buckets(incoming)
             return self.spark.createDataFrame([], "document_url string, id string")
-        incoming = incoming.localCheckpoint(eager=True)
-        try:
-            buckets = self._buckets_of(incoming)
-            docs = F.broadcast(incoming.select("document_url").distinct())
-            # materialized BEFORE the overwrite rewrites the files it reads
-            stale = (self.read().filter(F.col("bucket").isin(buckets))
-                     .join(docs, "document_url", "left_semi")
-                     .join(incoming.select(*KEY).distinct(), list(KEY),
-                           "left_anti")
-                     .select(*KEY)
-                     .localCheckpoint(eager=True))
-            self._merge(incoming, docs, ["document_url"], buckets)
-        finally:
-            release_checkpoint(incoming)
+        buckets = self._buckets_of(incoming)
+        docs = F.broadcast(incoming.select("document_url").distinct())
+        # materialized BEFORE the overwrite rewrites the files it reads
+        stale = (self.read().filter(F.col("bucket").isin(buckets))
+                 .join(docs, "document_url", "left_semi")
+                 .join(incoming.select(*KEY).distinct(), list(KEY),
+                       "left_anti")
+                 .select(*KEY)
+                 .localCheckpoint(eager=True))
+        self._merge(incoming, docs, ["document_url"], buckets)
         return stale
 
     def apply_changes(self, document_urls: list[str],

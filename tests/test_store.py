@@ -371,8 +371,37 @@ def _words(n, tag):
 def _store_state(store):
     return sorted(
         (r.document_url, r.id, r.chunk_text, tuple(r.embedding),
-         tuple(r.embedding_q8), r.embedding_norm, r.page_number, r.bucket)
+         r.page_number, r.bucket)
         for r in store.read().collect())
+
+
+def _expected_state(model, events, spark, cfg, homes):
+    """The store a CDC batch should leave, computed with plain Python
+    from the events and never through a store mutation: the last event
+    per url wins, each touched url's rows leave ``model`` (url -> rows),
+    and each create adds the chunk rows of its content.  Chunking and
+    embedding still come from the pipeline's operators."""
+    from document_vector_pipeline_spark.operators.embed import add_embeddings
+    from document_vector_pipeline_spark.operators.pipeline import (
+        blobs_to_chunks,
+    )
+
+    last = {}
+    for seq, op, url, content in sorted(events):
+        last[url] = (op, content)
+    for url in last:
+        model.pop(url, None)
+    creates = [(u, c) for u, (op, c) in sorted(last.items())
+               if op == "create"]
+    blobs = spark.createDataFrame(creates,
+                                  "document_url string, content string")
+    for r in add_embeddings(blobs_to_chunks(blobs, cfg), cfg=cfg).select(
+            "document_url", F.col("chunk_number").cast("string"),
+            "chunk_text", F.col("embedding").cast("array<float>"),
+            F.coalesce("page_number", F.lit(0)).cast("int")).collect():
+        model.setdefault(r[0], []).append(
+            (r[0], r[1], r[2], tuple(r[3]), r[4], homes[r[0]]))
+    return sorted(row for rows in model.values() for row in rows)
 
 
 def _two_pass(events, store, cfg):
@@ -395,9 +424,10 @@ def _two_pass(events, store, cfg):
     store.upsert(add_embeddings(blobs_to_chunks(blobs, cfg), cfg=cfg))
 
 
-def test_apply_blob_events_one_merge_equals_two_pass_oracle(
+def test_apply_blob_events_one_merge_matches_model_and_two_pass(
         spark, tmp_path, monkeypatch):
-    """One mixed CDC batch through apply_blob_events equals delete-then-
+    """One mixed CDC batch through apply_blob_events leaves exactly the
+    rows a plain-Python model of the events predicts, equals delete-then-
     upsert on a twin store, and reaches the store's parquet write once:
     a re-create that shrinks 5 chunks to 3, a delete of a url never
     ingested, a create with empty content (zero chunks), a delete that
@@ -431,6 +461,7 @@ def test_apply_blob_events_one_merge_equals_two_pass_oracle(
              (7, "delete", "mem://d8.txt", None)]              # last wins
     got = VectorStore(spark, str(tmp_path / "got"), cfg)
     want = VectorStore(spark, str(tmp_path / "want"), cfg)
+    model = {}
     homes = {r[0]: r[1] for r in spark.createDataFrame(
         [(f"mem://d{i}.txt",) for i in range(10)], "u string")
         .select("u", got._bucket(F.col("u"))).collect()}
@@ -441,6 +472,8 @@ def test_apply_blob_events_one_merge_equals_two_pass_oracle(
     # a first batch into a store that does not exist yet: one write
     apply_blob_events(spark.createDataFrame(first, EVENT_SCHEMA), got, cfg)
     assert writes == [got.path]
+    assert _store_state(got) == _expected_state(model, first, spark, cfg,
+                                                homes)
     _two_pass(first, want, cfg)
     assert _store_state(got) == _store_state(want)
     n_chunks = {}
@@ -451,8 +484,9 @@ def test_apply_blob_events_one_merge_equals_two_pass_oracle(
     writes.clear()
     apply_blob_events(spark.createDataFrame(batch, EVENT_SCHEMA), got, cfg)
     assert writes == [got.path]
-    _two_pass(batch, want, cfg)
     state = _store_state(got)
+    assert state == _expected_state(model, batch, spark, cfg, homes)
+    _two_pass(batch, want, cfg)
     assert state == _store_state(want)
     urls = {r[0] for r in state}
     assert urls == {"mem://d0.txt", "mem://d1.txt", "mem://d2.txt",
